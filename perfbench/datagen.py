@@ -348,8 +348,8 @@ class IngestStream:
     seed: int = 0
 
     @classmethod
-    def of_size(cls, size: str, seed: int) -> "IngestStream":
-        return cls(500, seed=seed) if size == "full" else cls(20, 12, seed=seed)
+    def of_size(cls, size: str, seed: int, instances: int = 500) -> "IngestStream":
+        return cls(instances, seed=seed) if size == "full" else cls(20, 12, seed=seed)
 
     @property
     def series(self) -> int:

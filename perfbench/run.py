@@ -6,9 +6,10 @@ Run from the repository root.  Spark runs at ``local[nproc]``.  Inputs
 are built on first use into ``.perfbench_cache/`` (in a child process, so
 neither set-up time nor peak memory includes the build), then the run
 
-1. sets up three times (session start, open inputs), then runs one
-   checked warm-up round drawn from a fixed seed; ``setup_s`` is the
-   median set-up plus the warm-up round;
+1. sets up once: starts Spark, opens the inputs and runs ``WARM_OPS``
+   ops of a round drawn from a fixed seed (one of each kind first), checked;
+   ``setup_s`` is the time from process start to the first timed op,
+   less the input build;
 2. draws the op stream from ``--seed`` and runs it in whole rounds until
    ``--seconds`` of op time has been measured, checking every result;
 3. prints a report of every metric, then one JSON line with ``correct``,
@@ -17,10 +18,13 @@ neither set-up time nor peak memory includes the build), then the run
    with ``--trace 1``.
 
 ``op_cpu_ms`` is the mean CPU time (this process plus the gateway JVM, all
-threads) per op.  On a shared machine it stays steady where wall-clock
-latency does not, so BENCHMARK.json bounds it and ``setup_s`` and
-``peak_rss_mb``; ``op_p50_ms``, ``op_tail_ms`` and ``ops_per_s`` are
-reported beside them.
+threads) per op.  It leaves out time the machine gave to other tenants
+but cannot see parallelism or waiting; ``ops_per_s`` (one client, so the
+inverse of the mean op latency) does.  BENCHMARK.json bounds these two and
+``setup_s``.  The median and tail latencies and ``peak_rss_mb`` are
+reported beside them: on 4 vCPU their spread over ten seeds was too wide
+to bound, as the median op moves with the seeded op mix and peak RSS with
+when the JVM grows its heap.
 
 With ``--trace 1`` the untraced loop runs first, then the same op stream
 again with the span recorder installed, each for half of ``--seconds``;
@@ -57,7 +61,6 @@ from perfbench.workloads import HEADLINE, WORKLOADS, _registry, query_layer  # n
 # printed for every workload; BENCHMARK.json names the ones the final JSON line carries
 END_TO_END = {"setup_s": "s", "op_p50_ms": "ms", "op_tail_ms": "ms", "ops_per_s": "ops/s",
               "error_ratio": "ratio", "peak_rss_mb": "MB", "op_cpu_ms": "ms"}
-SETUPS = 3
 TAIL_BEYOND = 10  # the tail percentile keeps this many ops above it
 WARM_SEED = 999_983  # seed of the warm-up round's op stream
 HEAP = "2g"
@@ -83,12 +86,10 @@ def configure_env() -> int:
 def start_session():
     from parquet_common_spark.session import get_spark
 
-    # A fixed, pre-touched heap: peak RSS then measures memory beyond the
-    # heap (native, off-heap, Python) instead of when G1 chose to grow it.
     spark = get_spark("perfbench", extra_conf={
         "spark.sql.warehouse.dir": str(G.CACHE_ROOT / "warehouse"),
         "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={G.CACHE_ROOT / 'tmp'} "
-                                         f"-XX:-UsePerfData -Xms{HEAP} -XX:+AlwaysPreTouch",
+                                         "-XX:-UsePerfData",
     })
     spark.sparkContext.setLogLevel("ERROR")
     return spark
@@ -183,6 +184,21 @@ def percentile_tail(lat_ms: list[float]) -> tuple[float, float, int]:
     return xs[rank - 1], 100.0 * rank / n, n - rank
 
 
+def warm_ops(round_: list, n: int) -> list:
+    """The first op of each kind in ``round_``, then the next ops in order,
+    ``n`` in all (at least one of each kind)."""
+    picked = []
+    for op in round_:
+        if all(op.kind != p.kind for p in picked):
+            picked.append(op)
+    for op in round_:
+        if len(picked) >= n:
+            break
+        if all(op is not p for p in picked):
+            picked.append(op)
+    return picked
+
+
 def closed_loop(workload, rounds, seconds: float, tracer=None, cpu=time.process_time) -> dict:
     """Run whole rounds until ``seconds`` of op time is measured, so every
     run measures the same op mix."""
@@ -226,7 +242,7 @@ def closed_loop(workload, rounds, seconds: float, tracer=None, cpu=time.process_
 
 
 def end_to_end(loop: dict, warm: dict, setup_s: float, rss_mb: float) -> dict:
-    """Latencies come from the timed loop; errors count the warm-up round too."""
+    """Latencies come from the timed loop; errors count the warm-up ops too."""
     lat, ops = loop["lat_ms"], loop["ops"]
     tail, pct, beyond = percentile_tail(lat)
     m = {
@@ -277,32 +293,24 @@ def main(argv=None) -> int:
     build_s = ensure_inputs(workload, args.size)
     inputs = inputs_for(workload)
 
-    setups, session_s = [], []
-    spark = None
-    for i in range(SETUPS):
-        if spark is not None:
-            spark.stop()
-        t0 = T_START + build_s if i == 0 else time.perf_counter()
-        t_s = time.perf_counter()
-        spark = start_session()
-        session_s.append(time.perf_counter() - t_s)
-        workload.open(spark, inputs)
-        setups.append(time.perf_counter() - t0)
-
+    t_s = time.perf_counter()
+    spark = start_session()
+    session_s = time.perf_counter() - t_s
     try:
-        # one checked round from a fixed seed warms the JIT and Spark's
-        # caches; its time is part of setup_s
+        workload.open(spark, inputs)
+        # the first ops of a round from a fixed seed, checked, warm the JIT
+        # and Spark's code caches; their time is part of setup_s
         cpu = cpu_clock(spark)
-        warm = closed_loop(workload, workload.rounds(np.random.default_rng(WARM_SEED), 1),
-                           math.inf, cpu=cpu)
-        warm_s = warm["timed_s"]
+        warm_round = workload.rounds(np.random.default_rng(WARM_SEED), 1)[0]
+        warm = closed_loop(workload, [warm_ops(warm_round, workload.WARM_OPS)], math.inf, cpu=cpu)
+        setup_s = time.perf_counter() - T_START - build_s
         # a traced run splits its time between the untraced and traced loops
         seconds = args.seconds / 2 if args.trace else args.seconds
         n_rounds = int(4 * args.seconds) + 8
         loop = closed_loop(workload, workload.rounds(np.random.default_rng(args.seed), n_rounds),
                            seconds, cpu=cpu)
         rss_mb = (jvm_hwm_kb(spark) + resource.getrusage(resource.RUSAGE_SELF).ru_maxrss) / 1024
-        metrics = end_to_end(loop, warm, statistics.median(setups) + warm_s, rss_mb)
+        metrics = end_to_end(loop, warm, setup_s, rss_mb)
         loop["failures"] = warm["failures"] + loop["failures"]
         if hasattr(workload, "extra_metrics"):
             metrics.update(workload.extra_metrics())
@@ -328,7 +336,7 @@ def main(argv=None) -> int:
             "trace": args.trace, "size": args.size, "nproc": nproc, **versions(spark),
             "layers": T.LAYERS,
             "load1_before": load_before, "load1_after": os.getloadavg()[0],
-            "setups_s": setups, "warm_round_s": warm_s, "session_start_s": session_s,
+            "setup_s": setup_s, "warm_s": warm["timed_s"], "session_start_s": session_s,
             "build_s": build_s,
             "metrics": {k: {"value": v, "unit": u} for k, (v, u) in {**metrics, **layer}.items()},
             "ops": [f"{op.kind}:{op.name}" for op in loop["ops"]],

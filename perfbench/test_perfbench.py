@@ -13,10 +13,11 @@ import subprocess
 import sys
 from pathlib import Path
 
+import numpy as np
 import pytest
 
 from perfbench import datagen as G
-from perfbench.run import END_TO_END, closed_loop, percentile_tail
+from perfbench.run import END_TO_END, closed_loop, percentile_tail, warm_ops
 from perfbench.workloads import WORKLOADS, Op, RangeQuery, SelectMix
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -107,3 +108,17 @@ def test_tail_percentile_keeps_ten_ops_beyond_it():
     assert percentile_tail([float(x) for x in range(1, 201)]) == (190.0, 95.0, 10)
     assert percentile_tail([float(x) for x in range(1, 16)])[0] == 14.0
     assert percentile_tail([3.0]) == (3.0, 100.0, 0)
+
+
+def test_range_query_round_draws_each_template_twice_and_one_block():
+    rq = RangeQuery("tiny")
+    for rnd in rq.rounds(np.random.default_rng(3), 4):
+        assert sorted(op.name for op in rnd if op.kind == "range") == sorted(RangeQuery.TEMPLATES * 2)
+        assert [op.kind for op in rnd].count("convert") == 1
+
+
+def test_warm_up_takes_one_op_of_each_kind_first():
+    rnd = [Op("range", "a"), Op("range", "b"), Op("range", "c"), Op("convert", "block")]
+    assert [op.name for op in warm_ops(rnd, 2)] == ["a", "block"]
+    assert [op.name for op in warm_ops(rnd, 3)] == ["a", "block", "b"]
+    assert [op.name for op in warm_ops(rnd, 1)] == ["a", "block"]

@@ -27,25 +27,27 @@ LAYERS = {
     "session": (["session.start_s"], ["setup_s"], "all"),
     "convert": (["convert.call_ms", "convert.jobs", "convert.shuffle_bytes",
                  "convert.files_written", "convert.bytes_written"],
-                ["op_cpu_ms", "op_p50_ms", "ops_per_s", "bytes_per_sample"], "ingest"),
-    "matchers": (["matchers.compile_us"], ["op_cpu_ms", "select_p50_ms"], "select-mix, range-query"),
+                ["op_p50_ms", "ops_per_s", "op_cpu_ms", "bytes_per_sample"],
+                "range-query (one 1,000-series block per round), ingest"),
+    "matchers": (["matchers.compile_us"], ["select_p50_ms", "op_cpu_ms"], "select-mix, range-query"),
     "queryable": (["queryable.select.call_ms", "queryable.select.exec_ms",
                    "queryable.select.files_read", "queryable.select.scan_bytes",
                    "queryable.select.rows_scanned", "queryable.select.scan_per_returned",
                    "queryable.select.shuffle_bytes", "queryable.labels.call_ms",
                    "queryable.labels.scan_bytes"],
-                  ["op_cpu_ms", "select_p50_ms", "labels_p50_ms", "op_p50_ms"],
+                  ["select_p50_ms", "labels_p50_ms", "op_p50_ms", "ops_per_s", "op_cpu_ms"],
                   "select-mix, range-query"),
     "limits": (["limits.check_ms", "limits.jobs", "limits.trips"],
-               ["op_cpu_ms", "select_p50_ms", "op_tail_ms"], "select-mix"),
+               ["select_p50_ms", "op_tail_ms", "op_cpu_ms"], "select-mix"),
     "engine": (["engine.parse_ms", "engine.plan_ms", "engine.exec_ms", "engine.rows_scanned",
                 "engine.scan_per_used", "engine.shuffle_bytes"],
-               ["op_cpu_ms", "op_p50_ms", "op_tail_ms"], "range-query"),
+               ["op_p50_ms", "op_tail_ms", "ops_per_s", "op_cpu_ms"], "range-query"),
     "plans/operators": (["plans.<query>.exec_ms", "operators.<query>.exec_ms",
-                         "analytics.shuffle_bytes"], ["op_cpu_ms", "op_p50_ms", "ops_per_s"],
+                         "analytics.shuffle_bytes"], ["op_p50_ms", "ops_per_s", "op_cpu_ms"],
                         "analytics"),
     "spark": (["spark.jobs_per_op", "spark.tasks_per_op", "spark.busy_share",
-               "spark.gc_ms_per_op"], ["op_cpu_ms", "op_p50_ms", "op_tail_ms", "peak_rss_mb"], "all"),
+               "spark.gc_ms_per_op"], ["op_p50_ms", "op_tail_ms", "ops_per_s", "op_cpu_ms",
+                                       "peak_rss_mb"], "all"),
 }
 SELF_LAYERS = ("bench", "convert", "matchers", "queryable", "limits", "engine",
                "plans", "operators")
@@ -305,25 +307,28 @@ def _counter(spans, key) -> int:
     return sum(s.attrs.get("spark", {}).get(key, 0) for s in spans)
 
 
-def per_layer_metrics(spans: list[Span], ops: list, session_s: list[float], cores: int,
+def per_layer_metrics(spans: list[Span], ops: list, session_s: float, cores: int,
                       query_layers: dict[str, str]) -> dict[str, tuple[float, str]]:
     """Every per-layer metric from the spans of one traced loop.
 
-    Times are medians per call; counts are per timed op; a layer that the
-    workload never calls reads 0."""
+    Times are medians per call; convert, select and engine counts are per
+    call of that layer, the others per timed op; a layer that the workload
+    never calls reads 0."""
     spans = in_ops(spans)
     kids = _subtree(spans)
     n_ops = max(len(ops), 1)
     named = lambda n: [s for s in spans if s.name == n]  # noqa: E731
     under = lambda prefix: [s for s in spans if s.name.startswith(prefix)]  # noqa: E731
-    m: dict[str, tuple[float, str]] = {"session.start_s": (_med(session_s), "s")}
+    m: dict[str, tuple[float, str]] = {"session.start_s": (session_s, "s")}
 
     conv = named("convert.call")
+    per_conv = max(len(conv), 1)
     m["convert.call_ms"] = (_med([s.ms for s in conv]), "ms")
-    m["convert.jobs"] = (_counter(under("convert."), "jobs") / n_ops, "count")
-    m["convert.shuffle_bytes"] = (_counter(under("convert."), "shuffle_bytes") / n_ops, "B")
-    m["convert.files_written"] = (sum(s.attrs.get("files_written", 0) for s in conv) / n_ops, "count")
-    m["convert.bytes_written"] = (sum(s.attrs.get("bytes_written", 0) for s in conv) / n_ops, "B")
+    m["convert.jobs"] = (_counter(under("convert."), "jobs") / per_conv, "count")
+    m["convert.shuffle_bytes"] = (_counter(under("convert."), "shuffle_bytes") / per_conv, "B")
+    m["convert.files_written"] = (
+        sum(s.attrs.get("files_written", 0) for s in conv) / per_conv, "count")
+    m["convert.bytes_written"] = (sum(s.attrs.get("bytes_written", 0) for s in conv) / per_conv, "B")
 
     m["matchers.compile_us"] = (_med([s.ms * 1e3 for s in named("matchers.compile")]), "us")
 
@@ -350,14 +355,15 @@ def per_layer_metrics(spans: list[Span], ops: list, session_s: list[float], core
                          / n_ops, "count")
 
     eng_exec = named("engine.exec")
+    per_query = max(len(eng_exec), 1)
     m["engine.parse_ms"] = (_med([s.ms for s in named("engine.parse")]), "ms")
     m["engine.plan_ms"] = (_med([self_ms(s, kids) for s in named("engine.plan")]), "ms")
     m["engine.exec_ms"] = (_med([s.ms for s in eng_exec]), "ms")
     scanned = _counter(eng_exec, "rows_scanned")
     used = sum(op.info.get("used", 0) for op in ops if op.kind == "range")
-    m["engine.rows_scanned"] = (scanned / n_ops, "count")
+    m["engine.rows_scanned"] = (scanned / per_query, "count")
     m["engine.scan_per_used"] = (scanned / used if used else 0.0, "ratio")
-    m["engine.shuffle_bytes"] = (_counter(eng_exec, "shuffle_bytes") / n_ops, "B")
+    m["engine.shuffle_bytes"] = (_counter(eng_exec, "shuffle_bytes") / per_query, "B")
 
     for q, layer in query_layers.items():
         m[f"{layer}.{q}.exec_ms"] = (_med([s.ms for s in named(f"{layer}.{q}.exec")]), "ms")

@@ -2,11 +2,11 @@
 
 A workload builds its cached inputs (``build``, run in a separate
 process), opens them (``open``, part of set-up), draws its op stream from
-a seed (``rounds``; the run's set-up ends with one round drawn from a
-fixed warm-up seed), runs one op (``run``, timed) and checks its
-result against the generator's closed-form expectation (``check``,
-untimed).  A round is a block of ops with a fixed composition, so two
-seeds measure the same mix.
+a seed (``rounds``; the run's set-up ends with ``WARM_OPS`` ops of a
+round drawn from a fixed warm-up seed), runs one op (``run``, timed) and
+checks its result against the generator's closed-form expectation
+(``check``, untimed).  A round is a block of ops with a fixed
+composition, so two seeds measure the same mix.
 
 ``tracer.span`` marks the benchmark's own calls into a layer; it is a
 no-op unless the run is traced.
@@ -53,6 +53,7 @@ class SelectMix:
     one Quota per round that must trip."""
 
     name = "select-mix"
+    WARM_OPS = 4
     VARIANTS = 8
 
     def __init__(self, size: str, tracer=NoTrace()):
@@ -179,18 +180,23 @@ class SelectMix:
 class RangeQuery:
     """Two daily shards of counters, gauges and histogram buckets (3M
     samples); each op is a seeded 1h range query at 60 s step from four
-    dashboard templates,
-    run as ``PromQLEngine.from_shards(...).eval_range_df(...).collect()``."""
+    dashboard templates, each drawn twice per round,
+    run as ``PromQLEngine.from_shards(...).eval_range_df(...).collect()``.
+    Each round also converts one fresh 2h block (see ``Ingest``) of 1,000
+    series, as a new block lands while dashboards refresh, so the write
+    path is measured without a workload of its own."""
 
     name = "range-query"
-    # a dashboard refresh: the request-rate panel is drawn twice as often
-    TEMPLATES = ("rate_sum", "rate_sum", "bucket_quantile", "max_over_time", "topk")
+    WARM_OPS = 2
+    TEMPLATES = ("rate_sum", "bucket_quantile", "max_over_time", "topk")
+    BLOCK_INSTANCES = 100  # x 10 metrics = 1,000 series per converted block
     WINDOW_MS = 3_600_000
     STEP_MS = 60_000
 
     def __init__(self, size: str, tracer=NoTrace()):
         self.size, self.tracer = size, tracer
         self.data = G.RangeData.of_size(size)
+        self.ingest = Ingest(size, tracer, self.BLOCK_INSTANCES)
 
     def build_params(self):
         d = self.data
@@ -204,6 +210,7 @@ class RangeQuery:
     def open(self, spark, inputs: Path):
         self.spark = spark
         self.shards = [str(inputs / f"day{d}") for d in range(self.data.days)]
+        self.ingest.open(spark, inputs)
 
     def _engine(self):
         from parquet_common_spark.promqltest.engine import PromQLEngine
@@ -213,10 +220,11 @@ class RangeQuery:
     def rounds(self, rng, n: int) -> list[list[Op]]:
         d = self.data
         span_steps = (d.days * G.DAY_MS - 3 * self.WINDOW_MS) // self.STEP_MS
+        self.ingest.start_stream(rng)
         out = []
-        for _ in range(n):
-            ops = []
-            for name in self.TEMPLATES:
+        for r in range(n):
+            ops = [self.ingest.block_op(r)]
+            for name in self.TEMPLATES * 2:  # twice each, so the median op is steady
                 start = G.T0_MS + self.WINDOW_MS + int(rng.integers(0, span_steps)) * self.STEP_MS
                 end = start + self.WINDOW_MS
                 job = str(rng.choice(d.job_names))
@@ -253,13 +261,23 @@ class RangeQuery:
             return d.expect_max_over_time(a["job"], steps, 600_000)
         return d.expect_topk_gauge(5, steps)
 
+    def prepare(self, op: Op) -> None:
+        if op.kind == "convert":
+            self.ingest.prepare(op)
+
     def run(self, op: Op):
+        if op.kind == "convert":
+            self.ingest.tracer = self.tracer
+            return self.ingest.run(op)
         a = op.args
         df = self._engine().eval_range_df(a["expr"], a["start"], a["end"], self.STEP_MS)
         with self.tracer.span("engine.exec"):
             return df.collect()
 
     def check(self, op: Op, rows) -> bool:
+        if op.kind == "convert":
+            self.ingest.tracer = self.tracer
+            return self.ingest.check(op, rows)
         want = op.expect if op.expect is not None else self.expected(op)
         close = lambda x, y: math.isclose(x, y, rel_tol=1e-6, abs_tol=1e-9)  # noqa: E731
         if op.name == "topk":
@@ -276,6 +294,9 @@ class RangeQuery:
         return (len(rows) == len(want) and got.keys() == want.keys()
                 and all(close(got[k], want[k]) for k in want))
 
+    def extra_metrics(self) -> dict:
+        return self.ingest.extra_metrics()
+
 
 # -- ingest ----------------------------------------------------------------------
 
@@ -285,9 +306,10 @@ class Ingest:
     read-back through ParquetQueryable checks series and sample counts."""
 
     name = "ingest"
+    WARM_OPS = 1
 
-    def __init__(self, size: str, tracer=NoTrace()):
-        self.size, self.tracer = size, tracer
+    def __init__(self, size: str, tracer=NoTrace(), instances: int = 500):
+        self.size, self.tracer, self.instances = size, tracer, instances
 
     def build_params(self):
         return None  # nothing cached: every block comes from the run seed
@@ -308,14 +330,21 @@ class Ingest:
         op.expect = (table.num_rows // len(np.unique(table["ts"].to_numpy())), table.num_rows)
         return op
 
-    def rounds(self, rng, n: int) -> list[list[Op]]:
-        self.stream = G.IngestStream.of_size(self.size, int(rng.integers(1 << 31)))
+    def start_stream(self, rng) -> None:
+        self.stream = G.IngestStream.of_size(self.size, int(rng.integers(1 << 31)), self.instances)
         self._blocks = self.stream.blocks()
         self.bytes_written = self.samples_written = 0
-        return [[Op("convert", "block", {"block": b})] for b in range(n)]
+
+    @staticmethod
+    def block_op(b: int) -> Op:
+        return Op("convert", "block", {"block": b})
+
+    def rounds(self, rng, n: int) -> list[list[Op]]:
+        self.start_stream(rng)
+        return [[self.block_op(b)] for b in range(n)]
 
     def prepare(self, op: Op) -> None:
-        """Materialize the op's input block (untimed)."""
+        """Materialize the next block of the stream as the op's input (untimed)."""
         _, table = next(self._blocks)
         self._stage(op, table)
 
@@ -375,6 +404,7 @@ class Analytics:
     with DuckDB running the query's registry oracle SQL."""
 
     name = "analytics"
+    WARM_OPS = 2
 
     def __init__(self, size: str, tracer=NoTrace()):
         self.size, self.tracer = size, tracer
