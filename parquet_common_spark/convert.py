@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from parquet_common_spark import schema as S
+from parquet_common_spark.queryable import ShardDataset
 
 
 def wide_from_label_map(df: DataFrame, labels_col: str = "labels") -> DataFrame:
@@ -139,6 +140,12 @@ def convert_sharded(
             .option("maxRecordsPerFile", row_group_size)
             .parquet(samples_stage)
         )
+        meta = S.ShardMeta(
+            mint_ms=mint_ms,
+            maxt_ms=maxt_ms,
+            col_duration_ms=col_duration_ms,
+            sort_labels=tuple(sort_labels),
+        ).with_schemas(assigned.drop("_shard").schema, samples.drop("_shard").schema)
         dirs = []
         shard_ids = sorted(
             int(d.split("=", 1)[1])
@@ -159,12 +166,7 @@ def convert_sharded(
                 os.rename(sample_part, os.path.join(sdir, "samples.parquet"))
             else:  # series with zero in-range samples: empty table dir
                 os.makedirs(os.path.join(sdir, "samples.parquet"), exist_ok=True)
-            S.ShardMeta(
-                mint_ms=mint_ms,
-                maxt_ms=maxt_ms,
-                col_duration_ms=col_duration_ms,
-                sort_labels=tuple(sort_labels),
-            ).write(sdir)
+            meta.write(sdir)
             dirs.append(sdir)
         shutil.rmtree(series_stage, ignore_errors=True)
         shutil.rmtree(samples_stage, ignore_errors=True)
@@ -188,8 +190,6 @@ def to_shard(
     Same transform as :func:`convert` but returns live DataFrames — used to
     run the matcher engine directly over any relational input.
     """
-    from parquet_common_spark.queryable import ShardDataset
-
     if labels_col is not None and labels_col in df.columns:
         df = wide_from_label_map(df, labels_col)
     label_cols = S.label_columns(df.columns)
@@ -208,7 +208,9 @@ def to_shard(
         F.col(ts_col).cast("long").alias(S.TS_COLUMN),
         *value_exprs,
     )
-    meta = S.ShardMeta(mint_ms=mint_ms, maxt_ms=maxt_ms, col_duration_ms=col_duration_ms)
+    meta = S.ShardMeta(
+        mint_ms=mint_ms, maxt_ms=maxt_ms, col_duration_ms=col_duration_ms
+    ).with_schemas(series.schema, samples.schema)
     return ShardDataset(series=series, samples=samples, meta=meta)
 
 
@@ -346,7 +348,7 @@ def convert(
         maxt_ms=maxt_ms,
         col_duration_ms=col_duration_ms,
         sort_labels=tuple(sort_labels),
-    )
+    ).with_schemas(series_sorted.schema, samples.schema)
     meta.write(out_dir)
     return meta
 
@@ -593,14 +595,13 @@ def compact_shards(
     frames = []
     mint, maxt = None, None
     for d in shard_dirs:
-        meta = S.ShardMeta.read(d)
+        shard = ShardDataset.read(spark, d)
+        meta = shard.meta
         mint = meta.mint_ms if mint is None else min(mint, meta.mint_ms)
         maxt = meta.maxt_ms if maxt is None else max(maxt, meta.maxt_ms)
-        series = spark.read.parquet(os.path.join(d, "series.parquet"))
-        samples = spark.read.parquet(os.path.join(d, "samples.parquet"))
         frames.append(
-            samples.drop(S.TIME_BUCKET_COLUMN).join(
-                F.broadcast(series), S.SERIES_HASH_COLUMN
+            shard.samples.drop(S.TIME_BUCKET_COLUMN).join(
+                F.broadcast(shard.series), S.SERIES_HASH_COLUMN
             ).drop(S.SERIES_HASH_COLUMN)
         )
     wide = frames[0]
@@ -650,9 +651,8 @@ def delete_series(
     map-only: no global re-sort, no shuffle of the samples."""
     from parquet_common_spark.matchers import matchers_to_predicate
 
-    meta = S.ShardMeta.read(shard_dir)
-    series = spark.read.parquet(os.path.join(shard_dir, "series.parquet"))
-    samples = spark.read.parquet(os.path.join(shard_dir, "samples.parquet"))
+    src = ShardDataset.read(spark, shard_dir)
+    series, samples = src.series, src.samples
     pred = matchers_to_predicate(matchers, series.columns)
     removed = series.where(pred).select(S.SERIES_HASH_COLUMN)
     kept_series = series.where(~pred)
@@ -676,6 +676,7 @@ def delete_series(
         .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
         .parquet(os.path.join(out_dir, "samples.parquet"))
     )
+    meta = src.meta.with_schemas(kept_series.schema, kept_samples.schema)
     meta.write(out_dir)
     return meta
 
@@ -703,8 +704,8 @@ def downsample_shard(
     need the sparse-bucket merge the acceptance engine implements for
     ``sum()`` (promqltest/engine.py _hist_sum/_merge_sparse) — a
     documented slice; the reference has no downsampling at all."""
-    meta = S.ShardMeta.read(shard_dir)
-    samples = spark.read.parquet(os.path.join(shard_dir, "samples.parquet"))
+    src = ShardDataset.read(spark, shard_dir)
+    meta, samples = src.meta, src.samples
     win = (F.floor(F.col(S.TS_COLUMN) / F.lit(resolution_ms)) * F.lit(resolution_ms)).cast("long")
     last_struct = F.max(F.struct(F.col(S.TS_COLUMN), F.col(S.VALUE_COLUMN)))
     agg = (
@@ -745,5 +746,6 @@ def downsample_shard(
         .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
         .parquet(os.path.join(out_dir, "samples.parquet"))
     )
+    meta = meta.with_schemas(src.series.schema, agg.schema)
     meta.write(out_dir)
     return meta

@@ -218,6 +218,10 @@ def _as_prefix_alternation(pattern: str) -> list[str] | None:
     ``rlike`` alternation re-runs the regex engine per row — and the
     NegativeRegex select workloads put that regex on EVERY series row
     of the scan."""
+    if "\\" in pattern:
+        # the split on "|" and the paren scan below do not understand
+        # escapes (\|, \(, \)); leave escaped patterns to the rlike path
+        return None
     inner = pattern
     if inner.startswith("(") and inner.endswith(")") and not inner.startswith("(?"):
         # strip the parens only when they wrap the ENTIRE pattern

@@ -625,6 +625,7 @@ def pq4(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine, queryable/parquet_queryable_test.go:45-66.)"""
     import tempfile
 
+    from parquet_common_spark import schema as S
     from parquet_common_spark.convert import convert
     from parquet_common_spark.promqltest import PromQLEngine
 
@@ -645,7 +646,7 @@ def pq4(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((labels, k * 5 * 60 * 1000 * 1000, slope * k))  # µs
     df = spark.createDataFrame(rows, "labels map<string,string>, ts long, value double")
     out_dir = tempfile.mkdtemp(prefix="pq4_shard_")
-    convert(df, out_dir)
+    convert(df, out_dir, col_duration_ms=S.DEFAULT_COL_DURATION_MS * 1000)  # µs buckets
     eng = PromQLEngine.from_shards(spark, [out_dir])
     vec = eng.eval_range_df(
         "sum by (group) (rate(http_requests[10m]))",
@@ -1062,6 +1063,7 @@ def pq7(spark: SparkSession, sf_dir: str) -> DataFrame:
     write path of convert.go applied to engine output.)"""
     import tempfile
 
+    from parquet_common_spark import schema as S
     from parquet_common_spark.convert import convert
     from parquet_common_spark.promqltest import PromQLEngine
 
@@ -1082,7 +1084,7 @@ def pq7(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows.append((labels, k * 5 * 60 * 1000 * 1000, slope * k))  # µs
     df = spark.createDataFrame(rows, "labels map<string,string>, ts long, value double")
     raw_dir = tempfile.mkdtemp(prefix="pq7_raw_")
-    convert(df, raw_dir)
+    convert(df, raw_dir, col_duration_ms=S.DEFAULT_COL_DURATION_MS * 1000)  # µs buckets
     eng = PromQLEngine.from_shards(spark, [raw_dir])
     vec = eng.eval_range_df(
         "sum by (group) (rate(http_requests[10m]))",
@@ -1099,7 +1101,7 @@ def pq7(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value"),
     )
     rule_dir = tempfile.mkdtemp(prefix="pq7_rule_")
-    convert(rec, rule_dir)
+    convert(rec, rule_dir, col_duration_ms=S.DEFAULT_COL_DURATION_MS * 1000)
     out = PromQLEngine.from_shards(spark, [rule_dir]).eval_range_df(
         rule, 20 * 60 * 1000, 40 * 60 * 1000, 10 * 60 * 1000
     )

@@ -28,18 +28,28 @@ DataFrame plans:
     (promql/functions.go extrapolatedRate), re-expressed for
     eval-at-instant bounds.
 
-This is the acceptance-test path: plans are tiny and breadth matters
-more than throughput.  The production analytics path stays on the
-tumbling-window layer in functions/promql.py.
+Storage is either in memory (plain ``load``: the model the differential
+tests compare against) or shard-backed (``from_shards``, and ``load`` with
+``parquet_backed=True``).  Shard-backed, each selector reads only its own
+window — ``(eff-5m, eff]`` or ``(eff-range, eff]`` over the steps it is
+evaluated at — through one ``ParquetQueryable.select``, so shard pruning,
+time-bucket partition pruning, the ``s_ts`` filter and matcher pushdown
+all reach the scan.  This is the public instant/range query surface over
+converted shards; the tumbling-window layer in functions/promql.py stays
+the analytics path.
 """
 
 from __future__ import annotations
 
 import math
+import tempfile
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from parquet_common_spark import schema as S
 from parquet_common_spark.matchers import Matcher, matcher_to_predicate
+from parquet_common_spark.queryable import ParquetQueryable, ShardDataset
 from parquet_common_spark.schema import label_to_column
 from parquet_common_spark.functions import promql_vec as pv
 from parquet_common_spark.functions.histograms import histogram_quantile
@@ -86,12 +96,25 @@ class PromQLEvalError(ValueError):
     pass
 
 
+@dataclass(frozen=True)
+class _Steps:
+    """The eval timestamps: the ``_ev`` frame plans broadcast, and the
+    same timestamps in Python, from which each selector bounds its
+    storage window (and a subquery builds its inner grid) without a
+    Spark job.  Passed down explicitly rather than kept on the engine,
+    because evals run concurrently on shallow engine copies."""
+
+    df: DataFrame
+    evs: tuple[int, ...]
+
+
 def _mangle(names):
     return [label_to_column(n) for n in names]
 
 
 class PromQLEngine:
-    """Evaluates PromQL ASTs against samples accumulated from ``load``."""
+    """Evaluates PromQL ASTs against samples accumulated from ``load``
+    or against converted shards (``from_shards``)."""
 
     def __init__(self, spark: SparkSession, parquet_backed: bool = False):
         """``parquet_backed=True`` routes every ``load`` block through
@@ -104,9 +127,11 @@ class PromQLEngine:
         # calendar functions (minute/hour/month/...) extract UTC fields
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         self.parquet_backed = parquet_backed
-        self._samples: DataFrame | None = None
-        self._label_cols: list[str] = []
-        self._pending: list[DataFrame] = []
+        self._samples: DataFrame | None = None  # in-memory storage
+        # shard-backed storage (None: in memory); rebound, never mutated,
+        # so engine copies taken for concurrent evals keep their view
+        self._shards: list | None = [] if parquet_backed else None
+        self._ts_divisor = 1000  # stored timestamp units per engine ms
         # metric names known (at load time) to carry native-histogram
         # samples — lets binary × / ÷ pick the histogram side statically
         self._hist_metrics: set[str] = set()
@@ -117,8 +142,7 @@ class PromQLEngine:
 
     def clear(self):
         self._samples = None
-        self._label_cols = []
-        self._pending = []
+        self._shards = [] if self.parquet_backed else None
         self._hist_metrics = set()
         self._script_loaded = False
 
@@ -167,47 +191,27 @@ class PromQLEngine:
         )
         df = self.spark.createDataFrame(rows, schema)
         if self.parquet_backed:
-            self._pending.append(df)
-            self._samples = None  # force re-materialization
-            self._label_cols = list(dict.fromkeys([*self._label_cols, *cols]))
-            return
-        if self._samples is None:
+            self._shards = [*self._shards, self._write_shard(df)]
+        elif self._samples is None:
             self._samples = df
-            self._label_cols = cols
         else:
             self._samples = self._samples.unionByName(df, allowMissingColumns=True)
-            self._label_cols = list(dict.fromkeys([*self._label_cols, *cols]))
 
-    def _materialize_parquet(self) -> DataFrame:
-        """Write pending load blocks through convert() (one shard per
-        block — the reference's block->shard unit) and read them back
-        through the queryable select path."""
-        import tempfile
-
+    def _write_shard(self, df: DataFrame) -> ShardDataset:
+        """One load block -> one shard (the reference's block->shard
+        unit), timestamps stored in µs with the default 8h time buckets
+        counted in the same unit."""
         from parquet_common_spark.convert import convert
-        from parquet_common_spark.queryable import ParquetQueryable, ShardDataset
 
-        shards = []
-        for df in self._pending:
-            extra = ["stale"] + [c for c in _NH_COLS if c in df.columns]
-            out_dir = tempfile.mkdtemp(prefix="promqltest_shard_")
-            convert(
-                df.withColumn("ts", F.col("ts") * F.lit(1000)),  # ms -> µs
-                out_dir,
-                labels_col=None,
-                extra_value_cols=extra,
-            )
-            shards.append(ShardDataset.read(self.spark, out_dir))
-        q = ParquetQueryable(shards)
-        sel = q.select(-(2**62), 2**62, [])
-        labels = [c for c in sel.columns if c.startswith("l_")]
-        extras = [c for c in sel.columns if c == "stale" or c in _NH_COLS]
-        return sel.select(
-            *labels,
-            (F.col("s_ts") / F.lit(1000)).cast("long").alias("ts"),
-            F.col("s_value").alias("value"),
-            *extras,
+        out_dir = tempfile.mkdtemp(prefix="promqltest_shard_")
+        convert(
+            df.withColumn("ts", F.col("ts") * F.lit(1000)),  # ms -> µs
+            out_dir,
+            labels_col=None,
+            col_duration_ms=S.DEFAULT_COL_DURATION_MS * 1000,
+            extra_value_cols=["stale", *_NH_COLS],
         )
+        return ShardDataset.read(self.spark, out_dir)
 
     # ------------------------------------------------------------- public
 
@@ -221,8 +225,7 @@ class PromQLEngine:
         if isinstance(expr, str):
             expr = ast.parse_promql(expr)
         self._qstart = self._qend = int(t_ms)  # for @ start()/end()
-        steps = self.spark.createDataFrame([(int(t_ms),)], "_ev long")
-        kind, df = self._eval(expr, steps)
+        kind, df = self._eval(expr, self._steps([t_ms]))
         if kind != "vector":
             raise PromQLEvalError("eval_instant_df requires a vector expression")
         return df.drop("_ev")
@@ -237,8 +240,7 @@ class PromQLEngine:
         if isinstance(expr, str):
             expr = ast.parse_promql(expr)
         self._qstart, self._qend = evs[0], evs[-1]
-        steps = self.spark.createDataFrame([(e,) for e in evs], "_ev long")
-        df = self._hist_vec(expr, steps)
+        df = self._hist_vec(expr, self._steps(evs))
         out: list[tuple[dict, dict]] = []
         index: dict = {}
         for r in df.collect():
@@ -299,8 +301,7 @@ class PromQLEngine:
             expr = ast.parse_promql(expr)
         evs = self._range_steps(start_ms, end_ms, step_ms)
         self._qstart, self._qend = evs[0], evs[-1]
-        steps = self.spark.createDataFrame([(e,) for e in evs], "_ev long")
-        kind, df = self._eval(expr, steps)
+        kind, df = self._eval(expr, self._steps(evs))
         if kind != "vector":
             raise PromQLEvalError("eval_range_df requires a vector expression")
         return df
@@ -316,29 +317,15 @@ class PromQLEngine:
         stored timestamps to the engine's milliseconds (1000 for the
         µs-stored promqltest/convert shards, 1 for ms-native data).
 
-        Selector evaluation flows through ParquetQueryable.select, so
-        matcher pushdown / time-bucket pruning / bucketed layouts all
-        apply before the engine's temporal algebra."""
-        from parquet_common_spark.queryable import ParquetQueryable
-
+        Opening the shards runs no Spark job (their metas record both
+        table schemas).  Each selector then reads through its own
+        ``ParquetQueryable.select`` bounded to the window its steps
+        need: shards outside it are skipped, and time-bucket partition
+        pruning, the ``s_ts`` filter and matcher pushdown all apply
+        before the engine's temporal algebra."""
         eng = cls(spark)
-        q = ParquetQueryable.from_paths(spark, shard_dirs)
-        sel = q.select(-(2**62), 2**62, [])
-        labels = [c for c in sel.columns if c.startswith("l_")]
-        nh_present = [c for c, _ in _NH_SCHEMA if c in sel.columns]
-        nh_missing = [(c, t) for c, t in _NH_SCHEMA if c not in sel.columns]
-        stale = (
-            F.col("stale") if "stale" in sel.columns else F.lit(False)
-        ).alias("stale")
-        eng._samples = sel.select(
-            *labels,
-            (F.col("s_ts") / F.lit(int(ts_divisor))).cast("long").alias("ts"),
-            F.col("s_value").alias("value"),
-            stale,
-            *[F.col(c) for c in nh_present],
-            *[F.lit(None).cast(t).alias(c) for c, t in nh_missing],
-        )
-        eng._label_cols = labels
+        eng._shards = [ShardDataset.read(spark, d) for d in shard_dirs]
+        eng._ts_divisor = int(ts_divisor)
         return eng
 
     def _run(self, expr, evs: list[int]):
@@ -348,8 +335,7 @@ class PromQLEngine:
         if isinstance(expr, str):
             expr = ast.parse_promql(expr)
         self._qstart, self._qend = evs[0], evs[-1]  # for @ start()/end()
-        steps = self.spark.createDataFrame([(e,) for e in evs], "_ev long")
-        kind, df = self._eval(expr, steps)
+        kind, df = self._eval(expr, self._steps(evs))
         if kind == "string":
             return ("string", df)
         rows = df.collect()
@@ -378,9 +364,13 @@ class PromQLEngine:
 
     # ------------------------------------------------------- core dispatch
 
-    def _eval(self, node, steps: DataFrame):
+    def _steps(self, evs) -> _Steps:
+        evs = tuple(int(e) for e in evs)
+        return _Steps(self.spark.createDataFrame([(e,) for e in evs], "_ev long"), evs)
+
+    def _eval(self, node, steps: _Steps):
         if isinstance(node, ast.NumberLiteral):
-            return ("scalar", steps.withColumn("value", F.lit(float(node.value))))
+            return ("scalar", steps.df.withColumn("value", F.lit(float(node.value))))
         if isinstance(node, ast.StringLiteral):
             return ("string", node.value)
         if isinstance(node, ast.VectorSelector):
@@ -407,20 +397,67 @@ class PromQLEngine:
 
     # ---------------------------------------------------------- selectors
 
-    def _base(self, sel: ast.VectorSelector) -> DataFrame:
-        if self._samples is None and self._pending:
-            self._samples = self._materialize_parquet()
-        if self._samples is None:
-            return self.spark.createDataFrame([], "ts long, value double, stale boolean")
-        df = self._samples
+    def _base(self, sel: ast.VectorSelector, window=None) -> DataFrame:
+        """The samples ``sel`` matches: label columns, ``ts`` (ms),
+        ``value``, ``stale`` and the native-histogram columns.
+        Shard-backed storage is read only inside ``window`` — ``(lo, hi]``
+        ms, None for all time; callers still apply their exact per-step
+        bounds."""
         matchers = [Matcher(m.name, m.op, m.value) for m in sel.matchers]
         if sel.name is not None:
             matchers.append(Matcher("__name__", "=", sel.name))
+        if self._shards is not None:
+            return self._select_shards(matchers, window)
+        if self._samples is None:
+            return self.spark.createDataFrame([], "ts long, value double, stale boolean")
+        df = self._samples
         cols = df.columns
         pred = F.lit(True)
         for m in matchers:
             pred = pred & matcher_to_predicate(m, cols)
         return df.where(pred)
+
+    def _select_shards(self, matchers: list[Matcher], window) -> DataFrame:
+        """One ``ParquetQueryable.select`` over the shards whose time
+        range meets ``window``, projected to the engine's sample columns.
+        The label columns are the union over ALL the engine's shards
+        (NULL-padded), so a grouping label stays addressable when the
+        shards in the window lack it."""
+        div = self._ts_divisor
+        if window is None:
+            mint, maxt = -(2**62), 2**62
+        else:  # ts truncates s_ts / div, so (lo, hi] ms lies inside this
+            mint, maxt = window[0] * div, window[1] * div + div - 1
+        shards = [s for s in self._shards if s.meta.mint_ms <= maxt and s.meta.maxt_ms >= mint]
+        labels = list(dict.fromkeys(c for s in self._shards for c in sorted(s.label_cols)))
+        if not shards:
+            ddl = [f"`{c}` string" for c in labels] + [
+                f"{c} {t}" for c, t in (("ts", "long"), ("value", "double"), ("stale", "boolean"), *_NH_SCHEMA)
+            ]
+            return self.spark.createDataFrame([], ", ".join(ddl))
+        sel = ParquetQueryable(shards).select(mint, maxt, matchers)
+        have = set(sel.columns)
+
+        def col(c: str, t: str):
+            return F.col(c) if c in have else F.lit(None).cast(t).alias(c)
+
+        stale = F.coalesce(F.col("stale"), F.lit(False)) if "stale" in have else F.lit(False)
+        return sel.select(
+            *[col(c, "string") for c in labels],
+            (F.col(S.TS_COLUMN) / F.lit(div)).cast("long").alias("ts"),
+            F.col(S.VALUE_COLUMN).alias("value"),
+            stale.alias("stale"),
+            *[col(c, t) for c, t in _NH_SCHEMA],
+        )
+
+    def _window(self, sel: ast.VectorSelector, steps: _Steps, range_ms: int):
+        """``(lo, hi]`` ms holding every step's ``(eff - range_ms, eff]``."""
+        if sel.at_ms is not None:
+            first = last = self._resolve_at(sel.at_ms)
+        else:
+            first, last = min(steps.evs), max(steps.evs)
+        off = int(sel.offset_ms or 0)
+        return first - off - int(range_ms), last - off
 
     def _resolve_at(self, at) -> int:
         if at == "start":
@@ -442,7 +479,7 @@ class PromQLEngine:
     def _instant_select(
         self,
         sel: ast.VectorSelector,
-        steps: DataFrame,
+        steps: _Steps,
         value_expr: str = "value",
         with_hist: bool = False,
     ) -> DataFrame:
@@ -450,11 +487,11 @@ class PromQLEngine:
         lookback window; ``value_expr='ts'`` yields timestamp() values;
         ``with_hist`` carries the native-histogram columns through (for
         the histogram_* function family)."""
-        base = self._base(sel)
+        base = self._base(sel, self._window(sel, steps, LOOKBACK_MS))
         labels = [c for c in base.columns if c.startswith("l_")]
         eff = self._eff_ev(sel)
         cond = (F.col("ts") > eff - F.lit(LOOKBACK_MS)) & (F.col("ts") <= eff)
-        j = base.join(F.broadcast(steps), on=cond, how="inner")
+        j = base.join(F.broadcast(steps.df), on=cond, how="inner")
         carried = [
             F.col("value").alias("v"),
             F.col("stale").alias("st"),
@@ -478,15 +515,15 @@ class PromQLEngine:
             .select("_ev", *labels, val.alias("value"), *extra)
         )
 
-    def _range_frame(self, node: ast.MatrixSelector, steps: DataFrame):
+    def _range_frame(self, node: ast.MatrixSelector, steps: _Steps):
         """Samples in the left-open window (eff-r, eff] per step; carries
         ``_start``/``_end`` (ms) for extrapolation math."""
         sel = node.selector
-        base = self._base(sel).where(~F.col("stale"))
+        base = self._base(sel, self._window(sel, steps, node.range_ms)).where(~F.col("stale"))
         labels = [c for c in base.columns if c.startswith("l_")]
         eff = self._eff_ev(sel)
         cond = (F.col("ts") > eff - F.lit(int(node.range_ms))) & (F.col("ts") <= eff)
-        j = base.join(F.broadcast(steps), on=cond, how="inner")
+        j = base.join(F.broadcast(steps.df), on=cond, how="inner")
         j = j.withColumn("_end", self._eff_ev(sel)).withColumn(
             "_start", F.col("_end") - F.lit(int(node.range_ms))
         )
@@ -502,7 +539,7 @@ class PromQLEngine:
     def _drop_name(self, df: DataFrame) -> DataFrame:
         return df.drop(NAME_COL) if NAME_COL in df.columns else df
 
-    def _binary(self, node: ast.Binary, steps: DataFrame):
+    def _binary(self, node: ast.Binary, steps: _Steps):
         op = node.op
         lk, ldf = self._eval(node.lhs, steps)
         rk, rdf = self._eval(node.rhs, steps)
@@ -584,7 +621,7 @@ class PromQLEngine:
 
     # -------------------------------------------------------- aggregation
 
-    def _aggregate(self, node: ast.Aggregate, steps: DataFrame):
+    def _aggregate(self, node: ast.Aggregate, steps: _Steps):
         kind, df = self._eval(node.expr, steps)
         if kind != "vector":
             raise PromQLEvalError(f"aggregation {node.op} requires an instant vector")
@@ -686,7 +723,7 @@ class PromQLEngine:
 
     # ----------------------------------------------------------- functions
 
-    def _call(self, node: ast.Call, steps: DataFrame):
+    def _call(self, node: ast.Call, steps: _Steps):
         fn = node.func
         h = getattr(self, f"_fn_{fn}", None)
         if h is not None:
@@ -714,7 +751,7 @@ class PromQLEngine:
 
     DEFAULT_SUBQUERY_STEP_MS = 60_000  # promqltest's default interval
 
-    def _subquery_frame(self, node: ast.Subquery, steps: DataFrame):
+    def _subquery_frame(self, node: ast.Subquery, steps: _Steps):
         """``expr[range:step]`` (promql/engine.go evalSubquery): the inner
         expression evaluated on an absolute step grid (multiples of the
         step since epoch), serving the points in (T-range, T] as a range
@@ -724,9 +761,8 @@ class PromQLEngine:
         step_ms = node.step_ms or self.DEFAULT_SUBQUERY_STEP_MS
         rng = int(node.range_ms)
         at = self._resolve_at(node.at_ms) if node.at_ms is not None else None
-        evs = [r["_ev"] for r in steps.select("_ev").collect()]
         grid: dict[int, None] = {}
-        for t in evs:
+        for t in steps.evs:
             eff = at if at is not None else t
             eff -= node.offset_ms
             # grid points are absolute multiples of step; (eff-rng, eff]
@@ -735,10 +771,7 @@ class PromQLEngine:
             while p <= eff:
                 grid[p] = None
                 p += step_ms
-        inner_steps = self.spark.createDataFrame(
-            [(p,) for p in sorted(grid)] or [(0,)], "_ev long"
-        )
-        kind, inner = self._eval(node.expr, inner_steps)
+        kind, inner = self._eval(node.expr, self._steps(sorted(grid) or [0]))
         if kind == "scalar":
             inner = inner  # a scalar subquery is a labelless vector
         elif kind != "vector":
@@ -749,7 +782,7 @@ class PromQLEngine:
         if node.offset_ms:
             eff = eff - F.lit(int(node.offset_ms))
         cond = (F.col("ts") > eff - F.lit(rng)) & (F.col("ts") <= eff)
-        j = pts.join(F.broadcast(steps), on=cond, how="inner")
+        j = pts.join(F.broadcast(steps.df), on=cond, how="inner")
         if at is not None:
             end = F.lit(at - int(node.offset_ms))
         else:
@@ -861,7 +894,7 @@ class PromQLEngine:
         agg = df.groupBy("_ev").agg(
             F.count(F.lit(1)).alias("_n"), F.max("value").alias("_v")
         )
-        out = steps.join(agg, on="_ev", how="left").select(
+        out = steps.df.join(agg, on="_ev", how="left").select(
             "_ev",
             F.when(F.col("_n") == 1, F.col("_v"))
             .otherwise(F.lit(float("nan")))
@@ -876,13 +909,13 @@ class PromQLEngine:
     def _fn_time(self, args, steps):
         return (
             "scalar",
-            steps.select(
+            steps.df.select(
                 "_ev", (F.col("_ev").cast("double") / F.lit(1000.0)).alias("value")
             ),
         )
 
     def _fn_pi(self, args, steps):
-        return ("scalar", steps.withColumn("value", F.lit(math.pi)))
+        return ("scalar", steps.df.withColumn("value", F.lit(math.pi)))
 
     def _fn_timestamp(self, args, steps):
         if isinstance(args[0], ast.VectorSelector):
@@ -967,13 +1000,13 @@ class PromQLEngine:
         if kind != "vector":
             raise PromQLEvalError("absent() requires an instant vector")
         present = df.select("_ev").distinct()
-        out = steps.join(present, on="_ev", how="left_anti")
+        out = steps.df.join(present, on="_ev", how="left_anti")
         return ("vector", self._with_absent_labels(out, args[0]))
 
     def _fn_absent_over_time(self, args, steps):
         rdf, labels, _ = self._matrix_arg(args[0], steps)
         present = rdf.select("_ev").distinct()
-        out = steps.join(present, on="_ev", how="left_anti")
+        out = steps.df.join(present, on="_ev", how="left_anti")
         # _with_absent_labels unwraps MatrixSelector itself; a Subquery
         # argument contributes no inferable labels (as upstream)
         return ("vector", self._with_absent_labels(out, args[0]))
@@ -1806,26 +1839,29 @@ class PromQLEngine:
         if isinstance(node, ast.Binary) and node.op in ("+", "-", "*", "/"):
             return self._hist_capable(node.lhs) or self._hist_capable(node.rhs)
         root = self._hist_root_selector(node)
-        if root is None:
-            return False
-        if root.name is not None and self._script_loaded:
-            # script-loaded storage: histogram-carrying metric names are
-            # tracked at load time, so the decision is per-metric
-            return root.name in self._hist_metrics
-        return "nh_schema" in self._base(root).columns
+        return root is not None and self._may_hold_hist(root)
+
+    def _may_hold_hist(self, sel: ast.VectorSelector) -> bool:
+        """Schema-only: whether storage can hold native-histogram samples
+        for ``sel`` at all.  Script loads track histogram-carrying metric
+        names, so there the answer is per metric; otherwise it is whether
+        the storage has the histogram columns."""
+        if sel.name is not None and self._script_loaded:
+            return sel.name in self._hist_metrics
+        if self._shards is not None:
+            return any("nh_schema" in s.samples.columns for s in self._shards)
+        return self._samples is not None and "nh_schema" in self._samples.columns
 
     def _fn_histogram_quantile(self, args, steps):
         # native path when the argument (a selector, or a sum()/rate()
         # chain over one) selects native-histogram samples; classic
-        # le-bucket path otherwise.  _base() first: it also materializes
-        # pending parquet-backed loads, so the probe is order-independent.
+        # le-bucket path otherwise.  The probe job runs only when the
+        # schema leaves both possible.
         root = self._hist_root_selector(args[1])
-        if root is not None:
-            base = self._base(root)
-            if "nh_schema" in base.columns:
-                probe = base.where(F.col("nh_schema").isNotNull())
-                if probe.limit(1).count() > 0:
-                    return self._native_histogram_quantile(args, steps)
+        if root is not None and self._may_hold_hist(root):
+            probe = self._base(root).where(F.col("nh_schema").isNotNull())
+            if probe.limit(1).count() > 0:
+                return self._native_histogram_quantile(args, steps)
         phi = self._scalar_param(args[0], steps)
         df = self._vec_arg(args[1], steps)
         le_col = label_to_column("le")
@@ -2337,7 +2373,7 @@ class PromQLEngine:
         if args:
             df = self._vec_arg(args[0], steps)
         else:
-            df = steps.select(
+            df = steps.df.select(
                 "_ev", (F.col("_ev").cast("double") / F.lit(1000.0)).alias("value")
             )
         t = F.timestamp_seconds(F.col("value"))

@@ -261,8 +261,8 @@ def run_script(
     parallel jobs from multiple threads, so the wall time of a script is
     bounded by its slowest eval, not the sum.  Snapshots are shallow
     copies: DataFrames are immutable and ``load``/``clear`` rebind
-    rather than mutate the sample frame, and each copy carries its own
-    ``_qstart``/``_qend`` eval bounds."""
+    rather than mutate the sample frame or shard list, and each copy
+    carries its own ``_qstart``/``_qend`` eval bounds."""
     import copy
     from concurrent.futures import ThreadPoolExecutor
 
@@ -275,8 +275,6 @@ def run_script(
         elif isinstance(cmd, LoadCmd):
             engine.load(cmd)
         elif isinstance(cmd, EvalCmd):
-            if engine.parquet_backed and engine._pending and engine._samples is None:
-                engine._samples = engine._materialize_parquet()
             pending.append((cmd, copy.copy(engine)))
     res.evals_total = len(pending)
     if not pending:

@@ -45,10 +45,20 @@ class ShardDataset:
 
     @classmethod
     def read(cls, spark: SparkSession, shard_dir: str) -> "ShardDataset":
+        """Open a shard directory.  With the schemas recorded in its meta
+        this runs no Spark job; older shards fall back to footer
+        inference (one job per table)."""
         meta = S.ShardMeta.read(shard_dir)
-        series = spark.read.parquet(os.path.join(shard_dir, "series.parquet"))
-        samples = spark.read.parquet(os.path.join(shard_dir, "samples.parquet"))
-        return cls(series=series, samples=samples, meta=meta)
+
+        def table(name: str, schema) -> DataFrame:
+            reader = spark.read if schema is None else spark.read.schema(schema)
+            return reader.parquet(os.path.join(shard_dir, name))
+
+        return cls(
+            series=table("series.parquet", meta.series_schema),
+            samples=table("samples.parquet", meta.samples_schema),
+            meta=meta,
+        )
 
     @classmethod
     def from_tables(

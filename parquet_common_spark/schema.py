@@ -17,17 +17,21 @@ schema/schema_builder.go:99-161) in idiomatic Spark terms:
     data-column time pruning (reference: search/materialize.go:691-709).
 
 Dataset metadata (minT / maxT / data_col_duration_ms, reference:
-schema/schema.go:33-35) is stored in a ``_meta.json`` sidecar per shard.
+schema/schema.go:33-35) is stored in a ``_meta.json`` sidecar per shard,
+together with both tables' Parquet schemas, so opening a shard reads no
+file footers.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 LABEL_COLUMN_PREFIX = "l_"
 SERIES_HASH_COLUMN = "s_series_hash"
@@ -85,23 +89,51 @@ def series_hash_column(label_cols: list[str]) -> Column:
     return F.xxhash64(F.concat(*parts) if parts else F.lit(""))
 
 
+_SCHEMA_KEYS = ("series_schema", "samples_schema")
+_META_KEYS = ("minT", "maxT", "data_col_duration_ms", "sort_labels", *_SCHEMA_KEYS)
+
+
 @dataclass
 class ShardMeta:
-    """Per-shard dataset metadata (reference: schema/schema.go:33-35)."""
+    """Per-shard dataset metadata (reference: schema/schema.go:33-35).
+
+    ``series_schema`` / ``samples_schema`` are the two tables' schemas
+    exactly as a Parquet read infers them (see :meth:`with_schemas`);
+    ``None`` for shards written before they were recorded, which are
+    then opened by footer inference."""
 
     mint_ms: int
     maxt_ms: int
     col_duration_ms: int = DEFAULT_COL_DURATION_MS
     sort_labels: tuple[str, ...] = DEFAULT_SORT_LABELS
     extra: dict = field(default_factory=dict)
+    series_schema: StructType | None = None
+    samples_schema: StructType | None = None
+
+    def with_schemas(self, series: StructType, samples: StructType) -> "ShardMeta":
+        """A copy recording the schemas of the tables a writer wrote from
+        DataFrames with schemas ``series`` / ``samples``.  Every field
+        becomes nullable and the ``s_time_bucket`` partition column moves
+        last as ``int`` — what footer inference plus partition discovery
+        return.  Every shard writer goes through here, so a meta copied
+        from a source shard never keeps the source's schemas."""
+        data = [f for f in samples.fields if f.name != TIME_BUCKET_COLUMN]
+        samples = StructType(data + [StructField(TIME_BUCKET_COLUMN, IntegerType())])
+        return dataclasses.replace(
+            self, series_schema=series.toNullable(), samples_schema=samples.toNullable()
+        )
 
     def to_json(self) -> str:
+        schemas = {
+            k: getattr(self, k).jsonValue() for k in _SCHEMA_KEYS if getattr(self, k) is not None
+        }
         return json.dumps(
             {
                 "minT": self.mint_ms,
                 "maxT": self.maxt_ms,
                 "data_col_duration_ms": self.col_duration_ms,
                 "sort_labels": list(self.sort_labels),
+                **schemas,
                 **self.extra,
             }
         )
@@ -109,13 +141,15 @@ class ShardMeta:
     @classmethod
     def from_json(cls, s: str) -> "ShardMeta":
         d = json.loads(s)
-        extra = {k: v for k, v in d.items() if k not in ("minT", "maxT", "data_col_duration_ms", "sort_labels")}
+        extra = {k: v for k, v in d.items() if k not in _META_KEYS}
+        schemas = {k: StructType.fromJson(d[k]) for k in _SCHEMA_KEYS if k in d}
         return cls(
             mint_ms=d["minT"],
             maxt_ms=d["maxT"],
             col_duration_ms=d.get("data_col_duration_ms", DEFAULT_COL_DURATION_MS),
             sort_labels=tuple(d.get("sort_labels", DEFAULT_SORT_LABELS)),
             extra=extra,
+            **schemas,
         )
 
     def write(self, shard_dir: str) -> None:

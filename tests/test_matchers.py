@@ -125,6 +125,18 @@ def test_regex_rewrites(spark):
     assert vals(Matcher("job", "=~", "(api|web)-.*")) == ["api-1", "api-2", "web-1"]
 
 
+def test_prefix_alternation_respects_escapes(spark):
+    r"""An escaped ``|`` is a literal, not an alternation: ``a\|b.*``
+    matches values starting with "a|b", never a bare "a" or "b..."."""
+    from parquet_common_spark.matchers import _as_prefix_alternation
+
+    assert _as_prefix_alternation(r"a\|b.*") is None
+    assert _as_prefix_alternation(r"(a.*|b\(.*)") is None
+    df = spark.createDataFrame([("a|bc",), ("a",), ("bc",), ("a.*",)], "l_x string")
+    pred = matcher_to_predicate(Matcher("x", "=~", r"a\|b.*"), df.columns)
+    assert [r["l_x"] for r in df.where(pred).collect()] == ["a|bc"]
+
+
 def test_conjunction(spark):
     df = spark.createDataFrame(
         [("m1", "a"), ("m1", None), ("m2", "a")], "l___name__ string, l_env string"
