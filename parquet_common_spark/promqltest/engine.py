@@ -51,6 +51,7 @@ from parquet_common_spark import schema as S
 from parquet_common_spark.matchers import Matcher, matcher_to_predicate
 from parquet_common_spark.queryable import ParquetQueryable, ShardDataset
 from parquet_common_spark.schema import label_to_column
+from parquet_common_spark.session import local_frame
 from parquet_common_spark.functions import promql_vec as pv
 from parquet_common_spark.functions.histograms import histogram_quantile
 from parquet_common_spark.promqltest import promqlparse as ast
@@ -189,7 +190,7 @@ class PromQLEngine:
             + ["ts long", "value double", "stale boolean"]
             + [f"{c} {t}" for c, t in _NH_SCHEMA]
         )
-        df = self.spark.createDataFrame(rows, schema)
+        df = local_frame(self.spark, rows, schema)
         if self.parquet_backed:
             self._shards = [*self._shards, self._write_shard(df)]
         elif self._samples is None:
@@ -366,7 +367,7 @@ class PromQLEngine:
 
     def _steps(self, evs) -> _Steps:
         evs = tuple(int(e) for e in evs)
-        return _Steps(self.spark.createDataFrame([(e,) for e in evs], "_ev long"), evs)
+        return _Steps(local_frame(self.spark, [(e,) for e in evs], "_ev long"), evs)
 
     def _eval(self, node, steps: _Steps):
         if isinstance(node, ast.NumberLiteral):
@@ -409,7 +410,7 @@ class PromQLEngine:
         if self._shards is not None:
             return self._select_shards(matchers, window)
         if self._samples is None:
-            return self.spark.createDataFrame([], "ts long, value double, stale boolean")
+            return local_frame(self.spark, [], "ts long, value double, stale boolean")
         df = self._samples
         cols = df.columns
         pred = F.lit(True)
@@ -434,7 +435,7 @@ class PromQLEngine:
             ddl = [f"`{c}` string" for c in labels] + [
                 f"{c} {t}" for c, t in (("ts", "long"), ("value", "double"), ("stale", "boolean"), *_NH_SCHEMA)
             ]
-            return self.spark.createDataFrame([], ", ".join(ddl))
+            return local_frame(self.spark, [], ", ".join(ddl))
         sel = ParquetQueryable(shards).select(mint, maxt, matchers)
         have = set(sel.columns)
 

@@ -166,6 +166,37 @@ def test_from_shards_opens_without_jobs_and_skips_histogram_probe(spark, daily_s
     assert jobs == 0
 
 
+def test_in_memory_frames_are_local_relations(spark):
+    """``load`` blocks and step frames are local relations, not Python
+    RDDs: a query over them scans no Python-fed RDD, and the engine's
+    results match the rows that were loaded (NaN, ±Inf, -0, stale)."""
+    from parquet_common_spark.promqltest import PromQLEngine
+    from parquet_common_spark.promqltest.scriptparse import LoadCmd, Sample
+    from parquet_common_spark.session import local_frame
+
+    eng = PromQLEngine(spark)
+    vals = [1.0, float("nan"), float("inf"), -0.0, -float("inf")]
+    eng.load(LoadCmd(MIN_MS, [
+        ({"__name__": "m", "k": "a"}, [Sample(i * MIN_MS, v) for i, v in enumerate(vals)]),
+        ({"__name__": "m", "k": "b"}, [Sample(0, 2.0), Sample(MIN_MS, 0.0, stale=True)]),
+    ]))
+    df = eng.eval_range_df("m", 0, 4 * MIN_MS, MIN_MS)
+    plan = _plan(df)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    got = {(r["l_k"], r["_ev"]): r["value"] for r in df.collect()}
+    for i, v in enumerate(vals):
+        w = got[("a", i * MIN_MS)]
+        assert (math.isnan(w) and math.isnan(v)) or (w == v and math.copysign(1, w) == math.copysign(1, v))
+    assert got[("b", 0)] == 2.0 and ("b", MIN_MS) not in got
+
+    ddl = "`l_x` string, ts long, nh_pos_idx array<int>, nh_custom_values array<double>"
+    rows = [("x", 1, [1, 2], None), (None, -5, [], [1.5, float("inf")])]
+    lf = local_frame(spark, rows, ddl)
+    assert lf.schema == spark.createDataFrame(rows, ddl).schema
+    assert [tuple(r) for r in lf.collect()] == rows
+    assert local_frame(spark, [], ddl).schema == lf.schema
+
+
 def _convert_shard(spark, out):
     rows = [
         ({"__name__": "m", "env": env, "i": str(i)}, t * 30 * MIN_MS, float(i + t))
