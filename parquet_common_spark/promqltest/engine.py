@@ -148,7 +148,8 @@ class PromQLEngine:
         self._script_loaded = False
 
     def load(self, cmd: LoadCmd):
-        self._script_loaded = True
+        if self._samples is None and not self._shards:
+            self._script_loaded = True  # storage holds only load blocks
         rows = []
         label_names: dict[str, None] = {}
         for labels, _ in cmd.series:
@@ -200,16 +201,17 @@ class PromQLEngine:
 
     def _write_shard(self, df: DataFrame) -> ShardDataset:
         """One load block -> one shard (the reference's block->shard
-        unit), timestamps stored in µs with the default 8h time buckets
-        counted in the same unit."""
+        unit), timestamps stored in the engine's unit (µs by default)
+        with the default 8h time buckets counted in the same unit."""
         from parquet_common_spark.convert import convert
 
+        div = self._ts_divisor
         out_dir = tempfile.mkdtemp(prefix="promqltest_shard_")
         convert(
-            df.withColumn("ts", F.col("ts") * F.lit(1000)),  # ms -> µs
+            df.withColumn("ts", F.col("ts") * F.lit(div)),  # ms -> stored unit
             out_dir,
             labels_col=None,
-            col_duration_ms=S.DEFAULT_COL_DURATION_MS * 1000,
+            col_duration_ms=S.DEFAULT_COL_DURATION_MS * div,
             extra_value_cols=["stale", *_NH_COLS],
         )
         return ShardDataset.read(self.spark, out_dir)
@@ -323,8 +325,9 @@ class PromQLEngine:
         ``ParquetQueryable.select`` bounded to the window its steps
         need: shards outside it are skipped, and time-bucket partition
         pruning, the ``s_ts`` filter and matcher pushdown all apply
-        before the engine's temporal algebra."""
-        eng = cls(spark)
+        before the engine's temporal algebra.  A later ``load`` adds
+        its block as one more shard."""
+        eng = cls(spark, parquet_backed=True)
         eng._shards = [ShardDataset.read(spark, d) for d in shard_dirs]
         eng._ts_divisor = int(ts_divisor)
         return eng
@@ -398,12 +401,11 @@ class PromQLEngine:
 
     # ---------------------------------------------------------- selectors
 
-    def _base(self, sel: ast.VectorSelector, window=None) -> DataFrame:
+    def _base(self, sel: ast.VectorSelector, window) -> DataFrame:
         """The samples ``sel`` matches: label columns, ``ts`` (ms),
         ``value``, ``stale`` and the native-histogram columns.
         Shard-backed storage is read only inside ``window`` — ``(lo, hi]``
-        ms, None for all time; callers still apply their exact per-step
-        bounds."""
+        ms; callers still apply their exact per-step bounds."""
         matchers = [Matcher(m.name, m.op, m.value) for m in sel.matchers]
         if sel.name is not None:
             matchers.append(Matcher("__name__", "=", sel.name))
@@ -425,10 +427,8 @@ class PromQLEngine:
         (NULL-padded), so a grouping label stays addressable when the
         shards in the window lack it."""
         div = self._ts_divisor
-        if window is None:
-            mint, maxt = -(2**62), 2**62
-        else:  # ts truncates s_ts / div, so (lo, hi] ms lies inside this
-            mint, maxt = window[0] * div, window[1] * div + div - 1
+        # ts truncates s_ts / div, so (lo, hi] ms lies inside this
+        mint, maxt = window[0] * div, window[1] * div + div - 1
         shards = [s for s in self._shards if s.meta.mint_ms <= maxt and s.meta.maxt_ms >= mint]
         labels = list(dict.fromkeys(c for s in self._shards for c in sorted(s.label_cols)))
         if not shards:
@@ -1810,26 +1810,26 @@ class PromQLEngine:
             ),
         )
 
-    def _hist_root_selector(self, node):
-        """The selector a histogram-capable expression bottoms out in:
-        unwraps sum()/rate()/increase() chains and histogram
-        arithmetic (the shapes _hist_vec evaluates natively)."""
+    def _hist_root(self, node):
+        """``(selector, range_ms)`` of the selector a histogram-capable
+        expression bottoms out in, with the range it reads per step
+        (the lookback for an instant selector): unwraps
+        sum()/rate()/increase() chains and histogram arithmetic (the
+        shapes _hist_vec evaluates natively).  None when there is none."""
         if isinstance(node, ast.Aggregate) and node.op in ("sum", "avg"):
-            return self._hist_root_selector(node.expr)
+            return self._hist_root(node.expr)
         if isinstance(node, ast.Binary) and node.op in ("+", "-", "*", "/"):
-            return self._hist_root_selector(node.lhs) or self._hist_root_selector(
-                node.rhs
-            )
+            return self._hist_root(node.lhs) or self._hist_root(node.rhs)
         if isinstance(node, ast.Call) and node.func in (
             "rate", "increase", "delta",
             "sum_over_time", "avg_over_time", "last_over_time",
         ):
             arg = node.args[0]
             if isinstance(arg, ast.MatrixSelector):
-                return arg.selector
+                return arg.selector, int(arg.range_ms)
             return None
         if isinstance(node, ast.VectorSelector):
-            return node
+            return node, LOOKBACK_MS
         return None
 
     def _hist_capable(self, node) -> bool:
@@ -1839,8 +1839,8 @@ class PromQLEngine:
         matching without running a job."""
         if isinstance(node, ast.Binary) and node.op in ("+", "-", "*", "/"):
             return self._hist_capable(node.lhs) or self._hist_capable(node.rhs)
-        root = self._hist_root_selector(node)
-        return root is not None and self._may_hold_hist(root)
+        root = self._hist_root(node)
+        return root is not None and self._may_hold_hist(root[0])
 
     def _may_hold_hist(self, sel: ast.VectorSelector) -> bool:
         """Schema-only: whether storage can hold native-histogram samples
@@ -1858,9 +1858,11 @@ class PromQLEngine:
         # chain over one) selects native-histogram samples; classic
         # le-bucket path otherwise.  The probe job runs only when the
         # schema leaves both possible.
-        root = self._hist_root_selector(args[1])
-        if root is not None and self._may_hold_hist(root):
-            probe = self._base(root).where(F.col("nh_schema").isNotNull())
+        root = self._hist_root(args[1])
+        if root is not None and self._may_hold_hist(root[0]):
+            sel, range_ms = root
+            probe = self._base(sel, self._window(sel, steps, range_ms))
+            probe = probe.where(F.col("nh_schema").isNotNull())
             if probe.limit(1).count() > 0:
                 return self._native_histogram_quantile(args, steps)
         phi = self._scalar_param(args[0], steps)

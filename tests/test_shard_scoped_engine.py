@@ -166,6 +166,59 @@ def test_from_shards_opens_without_jobs_and_skips_histogram_probe(spark, daily_s
     assert jobs == 0
 
 
+def test_histogram_probe_reads_only_its_window(spark, tmp_path, monkeypatch):
+    """When storage may hold native histograms, histogram_quantile's
+    probe reads the same window as the selector it inspects, not all
+    time."""
+    import tempfile
+
+    from parquet_common_spark.promqltest import PromQLEngine, parse_script
+    from parquet_common_spark.queryable import ParquetQueryable
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    eng = PromQLEngine(spark, parquet_backed=True)
+    (cmd,) = parse_script(
+        """
+load 5m
+    nh{env="a"} {{schema:0 sum:7 count:4 buckets:[1 2 1] offset:0}}x1
+"""
+    ).commands
+    eng.load(cmd)
+    calls = []
+    select = ParquetQueryable.select
+
+    def recording(self, mint, maxt, matchers):
+        calls.append((mint, maxt))
+        return select(self, mint, maxt, matchers)
+
+    monkeypatch.setattr(ParquetQueryable, "select", recording)
+    got = eng.eval_instant("histogram_quantile(0.75, nh)", 5 * MIN_MS)
+    assert got == ("vector", [({"env": "a"}, {5 * MIN_MS: 2.0})])
+    assert len(calls) >= 2 and set(calls) == {(0, 5 * MIN_MS * 1000 + 999)}
+
+
+def test_load_after_from_shards_is_queried(spark, daily_shards, tmp_path, monkeypatch):
+    """A ``load`` on an engine opened over shards adds its block as one
+    more shard, stored in the engine's time unit, next to the opened ones."""
+    import tempfile
+
+    from parquet_common_spark.promqltest import PromQLEngine, parse_script
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    eng = PromQLEngine.from_shards(spark, daily_shards, ts_divisor=1)
+    (cmd,) = parse_script(
+        """
+load 1m
+    http_requests_total{job="batch"} 0+60x10
+"""
+    ).commands
+    eng.load(cmd)
+    t = 10 * MIN_MS
+    rows = eng.eval_instant_df("http_requests_total", t).collect()
+    got = sorted((r["l_job"], r["value"]) for r in rows)
+    assert got == [("api", t / 1000.0), ("batch", 600.0), ("web", 2.0 * t / 1000.0)]
+
+
 def test_in_memory_frames_are_local_relations(spark):
     """``load`` blocks and step frames are local relations, not Python
     RDDs: a query over them scans no Python-fed RDD, and the engine's
@@ -374,7 +427,7 @@ def _as_map(result):
 
 
 @settings(
-    max_examples=int(os.environ.get("PROMQL_SCOPED_EXAMPLES", "15")),
+    max_examples=15,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.data_too_large],
 )
