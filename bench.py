@@ -139,7 +139,8 @@ def main() -> int:
     # r13: the primary layout behind these names is now the bucketed
     # zero-exchange table pair (one file per bucket) — same dataset,
     # same matchers, same result rows; the directory layout is the
-    # secondary key below.  See OPTIMIZATION_r13.md for the A/B.
+    # secondary key below.  The interleaved A/B is in the message of
+    # commit 24918dd.
     def run_select_bench():
         from parquet_common_spark.benchmarks import select_bench
 

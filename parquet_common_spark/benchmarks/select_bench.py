@@ -137,7 +137,7 @@ def run(spark: SparkSession, out_dir: str | None = None) -> dict:
     with 32 files per bucket the per-file open cost made it 2-3x
     SLOWER than the directory layout at this scale (every round's A/B
     said so); with one file per bucket it is ~2x FASTER
-    (OPTIMIZATION_r13.md carries the interleaved A/B).  Same dataset,
+    (the message of commit 24918dd carries the interleaved A/B).  Same dataset,
     same matchers, same rows — only the storage layout changed.  The
     directory layout stays measured as the secondary key
     (``run_dir``, reported as select_dir_* in BENCH_DIAG.json).

@@ -4,36 +4,51 @@ Spark-first equivalent of ``ConvertTSDBBlock`` (reference:
 convert/convert.go:348-426).  The reference iterates TSDB postings,
 re-encodes chunks into 8h data columns, globally sorts series by sort
 labels, splits into shards, and writes a labels file + chunks file pair per
-shard (convert/writer.go:63-107).  Here the same job is ONE declarative
-plan:
+shard through one sink (convert/writer.go:63-107, 188-260).  Here the same
+job is ONE declarative plan, built in two places only:
 
-    input (labels map | wide label cols, ts, value)
-      -> wide frame with one l_* column per label name present   (dynamic schema,
-         reference: convert/convert.go:495-503)
-      -> series_hash = xxhash64(sorted pairs)                    (reference: convert/reader.go:136)
-      -> series table:  distinct label sets + hash
-      -> samples table: (series_hash, time_bucket, ts, value)    (time_bucket ==
-         DataColumIdx, reference: schema/schema_builder.go:155-161)
-      -> repartitionByRange(sort_labels) + sortWithinPartitions  (== sortedPostings +
-         shardSeries, reference: convert/convert.go:633-826 — range partitioning IS
-         the reference's equal-size shard split)
-      -> write parquet, bloom filter on l___name__ + series_hash (reference:
-         convert/convert.go:81-88), maxRecordsPerFile == rowGroupSize,
-         samples partitioned by time_bucket (== per-time data columns)
+  :func:`to_shard` — the transform, shared by every writer:
+      input (labels map | wide label cols, ts, value)
+        -> wide frame with one l_* column per label name present   (dynamic schema,
+           reference: convert/convert.go:495-503)
+        -> series_hash = xxhash64(sorted pairs)                    (reference: convert/reader.go:136)
+        -> series table:  distinct label sets + hash
+        -> samples table: (series_hash, time_bucket, ts, value)    (time_bucket ==
+           DataColumIdx, reference: schema/schema_builder.go:155-161)
+
+  :func:`_write_shard` — the sink, the only code that knows the file format:
+      series sorted by sort labels then the full label set within each file,
+      samples sorted by (series_hash, ts) within each file and partitioned by
+      time_bucket (== per-time data columns), maxRecordsPerFile == row-group
+      cap, zstd by default, bloom-filter options on l___name__ and
+      series_hash.  parquet-mr writes a bloom only for a column chunk it
+      did not dictionary-encode, so in practice the series file carries one
+      on its unique ``s_series_hash`` and none on the repeating
+      ``l___name__`` or on the samples' ``s_series_hash``.  Both tables and
+      ``_meta.json`` go to a sibling temp directory that is renamed into
+      place last, so a failed write leaves the previous shard intact.
+
+:func:`convert` adds the global order: repartitionByRange(sort_labels) +
+sortWithinPartitions (== sortedPostings + shardSeries, reference:
+convert/convert.go:633-826 — range partitioning IS the reference's
+equal-size shard split).
 
 Scale notes (100 TB): the only shuffles are the range-repartition for sort
 order (required by the output contract) and the distinct for the series
 table (keyed on series_hash — high cardinality, no skew).  Samples are
 written partitioned by time_bucket so time-range queries prune at the
 directory level before any file I/O; label-equality queries prune via
-bloom + dictionary + min/max inside the sorted labels files.
+dictionary + min/max inside the sorted labels files.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import os
+import shutil
+import tempfile
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from parquet_common_spark import schema as S
 from parquet_common_spark.queryable import ShardDataset
@@ -53,6 +68,142 @@ def wide_from_label_map(df: DataFrame, labels_col: str = "labels") -> DataFrame:
     cols = [F.col(labels_col).getItem(n).alias(S.label_to_column(n)) for n in names]
     other = [c for c in df.columns if c != labels_col]
     return df.select(*cols, *other)
+
+
+def to_shard(
+    df: DataFrame,
+    ts_col: str = "ts",
+    value_col: str | None = "value",
+    labels_col: str | None = "labels",
+    col_duration_ms: int = S.DEFAULT_COL_DURATION_MS,
+    mint_ms: int | None = None,
+    maxt_ms: int | None = None,
+    extra_value_cols: list[str] | None = None,
+):
+    """In-memory conversion: long-form samples -> a ShardDataset (no I/O).
+
+    The one long-form -> (series, samples, meta) transform: every writer
+    in this module starts from it, and it also runs the matcher engine
+    directly over any relational input.  ``value_col=None`` leaves
+    ``s_value`` out, for samples that carry only ``extra_value_cols``.
+    """
+    if labels_col is not None and labels_col in df.columns:
+        df = wide_from_label_map(df, labels_col)
+    label_cols = S.label_columns(df.columns)
+    if mint_ms is None or maxt_ms is None:
+        row = df.agg(F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")).collect()[0]
+        mint_ms = int(row["mn"]) if mint_ms is None else mint_ms
+        maxt_ms = int(row["mx"]) if maxt_ms is None else maxt_ms
+    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
+    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
+    value_exprs = (
+        [F.col(value_col).cast("double").alias(S.VALUE_COLUMN)] if value_col is not None else []
+    ) + [F.col(c) for c in (extra_value_cols or [])]
+    samples = hashed.select(
+        F.col(S.SERIES_HASH_COLUMN),
+        S.data_col_idx(F.col(ts_col).cast("long"), mint_ms, col_duration_ms).alias(S.TIME_BUCKET_COLUMN),
+        F.col(ts_col).cast("long").alias(S.TS_COLUMN),
+        *value_exprs,
+    )
+    meta = S.ShardMeta(
+        mint_ms=mint_ms, maxt_ms=maxt_ms, col_duration_ms=col_duration_ms
+    ).with_schemas(series.schema, samples.schema)
+    return ShardDataset(series=series, samples=samples, meta=meta)
+
+
+def _series_order(label_cols: list[str], sort_labels: tuple[str, ...]) -> list[str]:
+    """Sort labels first, then the full label set (reference comparator:
+    convert/convert.go:745-755)."""
+    sort_cols = [S.label_to_column(l) for l in sort_labels if S.label_to_column(l) in label_cols]
+    return sort_cols + [c for c in sorted(label_cols) if c not in sort_cols]
+
+
+def _write_shard(
+    series: DataFrame,
+    samples: DataFrame,
+    out_dir: str,
+    meta: S.ShardMeta,
+    row_group_size: int = S.DEFAULT_ROW_GROUP_SIZE,
+    compression: str = "zstd",
+    series_compression: str | None = None,
+    samples_compression: str | None = None,
+    split_col: str | None = None,
+) -> S.ShardMeta:
+    """The one shard writer (reference: the single sink of
+    convert/writer.go:63-107, 188-260).  Callers choose the partitioning;
+    this sorts within partitions, applies the file options, records both
+    schemas in the meta and replaces ``out_dir`` atomically.
+
+    Everything goes to a sibling temp directory first, ``_meta.json``
+    last, and the directory is renamed into place at the end, so a failed
+    write leaves whatever was at ``out_dir`` untouched.  With
+    ``split_col``, rows are split by that column into one shard directory
+    ``out_dir/shard=<value>`` each (:func:`convert_sharded`), all renamed
+    into place together.  Returns the recorded meta."""
+    extra = [split_col] if split_col else []
+    meta = meta.with_schemas(series.drop(*extra).schema, samples.drop(*extra).schema)
+    order = _series_order(S.label_columns(series.columns), meta.sort_labels)
+    parent, name = os.path.split(os.path.abspath(out_dir))
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}.tmp-", dir=parent)
+    try:
+        # Each table is sorted by its partition columns first: the write
+        # needs that order and would otherwise plan its own sort on them
+        # alone, which replaces (not refines) a sort within partitions.
+        for table, df, codec, partition_cols, key, blooms in (
+            ("series.parquet", series, series_compression, extra, order,
+             [S.label_to_column(S.METRIC_NAME_LABEL), S.SERIES_HASH_COLUMN]),
+            ("samples.parquet", samples, samples_compression, [*extra, S.TIME_BUCKET_COLUMN],
+             [S.SERIES_HASH_COLUMN, S.TS_COLUMN], [S.SERIES_HASH_COLUMN]),
+        ):
+            df = df.sortWithinPartitions(*partition_cols, *key)
+            writer = (
+                df.write.option("compression", codec or compression)
+                .option("maxRecordsPerFile", row_group_size)
+                .partitionBy(*partition_cols)
+            )
+            for c in blooms:
+                writer = writer.option("parquet.bloom.filter.enabled#" + c, "true")
+            writer.parquet(os.path.join(tmp, table))
+        if split_col:
+            for part in os.listdir(os.path.join(tmp, "series.parquet")):
+                if not part.startswith(split_col + "="):
+                    continue
+                sdir = os.path.join(tmp, "shard=" + part.split("=", 1)[1])
+                os.makedirs(sdir)
+                for table in ("series.parquet", "samples.parquet"):
+                    src = os.path.join(tmp, table, part)
+                    if os.path.isdir(src):
+                        os.rename(src, os.path.join(sdir, table))
+                    else:  # series with zero in-range samples: empty table dir
+                        os.makedirs(os.path.join(sdir, table))
+                meta.write(sdir)
+            for table in ("series.parquet", "samples.parquet"):
+                shutil.rmtree(os.path.join(tmp, table))
+        else:
+            meta.write(tmp)
+        _replace_dir(tmp, out_dir)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    return meta
+
+
+def _replace_dir(new: str, target: str) -> None:
+    """Rename directory ``new`` to ``target``, removing what was there.
+    A directory cannot be renamed over a non-empty one, so the old one is
+    first moved aside (a rename within the same parent)."""
+    if not os.path.exists(target):
+        os.rename(new, target)
+        return
+    old = new + ".old"
+    os.rename(target, old)
+    try:
+        os.rename(new, target)
+    except BaseException:
+        os.rename(old, target)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def convert_sharded(
@@ -79,139 +230,39 @@ def convert_sharded(
     (series_hash -> shard_id) and joined onto samples so a series' labels
     and samples always land in the same shard — the positional-alignment
     contract of the reference's labels/chunks file pair (SURVEY.md §1.1),
-    expressed as an explicit key.
+    expressed as an explicit key.  ONE write per table, partitioned by
+    the shard id (the reference's per-shard writer fan-out,
+    convert/convert.go:390-419, as a single distributed write); the
+    writer then promotes each partition to its own shard directory with
+    renames — metadata ops, no data movement.
 
     Returns the shard directory paths (each openable by ShardDataset.read).
     """
-    if labels_col is not None and labels_col in df.columns:
-        df = wide_from_label_map(df, labels_col)
-    label_cols = S.label_columns(df.columns)
-    row = df.agg(F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")).collect()[0]
-    mint_ms, maxt_ms = int(row["mn"]), int(row["mx"])
-
-    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
-    sort_cols = [S.label_to_column(l) for l in sort_labels if S.label_to_column(l) in label_cols]
-    remaining = [c for c in sorted(label_cols) if c not in sort_cols]
-    order = sort_cols + remaining
-
-    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
+    shard = to_shard(
+        df, ts_col=ts_col, value_col=value_col, labels_col=labels_col,
+        col_duration_ms=col_duration_ms,
+    )
+    order = _series_order(shard.label_cols, sort_labels)
     assigned = (
-        series.repartitionByRange(num_shards, *[F.col(c) for c in order])
-        .sortWithinPartitions(*order)
+        shard.series.repartitionByRange(num_shards, *[F.col(c) for c in order])
         .withColumn("_shard", F.spark_partition_id())
         .persist()
     )
     try:
-        shard_map = assigned.select(S.SERIES_HASH_COLUMN, "_shard")
-        samples = hashed.select(
-            F.col(S.SERIES_HASH_COLUMN),
-            S.data_col_idx(F.col(ts_col).cast("long"), mint_ms, col_duration_ms).alias(
-                S.TIME_BUCKET_COLUMN
-            ),
-            F.col(ts_col).cast("long").alias(S.TS_COLUMN),
-            F.col(value_col).cast("double").alias(S.VALUE_COLUMN),
-        ).join(shard_map, S.SERIES_HASH_COLUMN)
-
-        # ONE pass per table: write partitioned by _shard (the reference's
-        # per-shard writer fan-out, convert/convert.go:390-419, as a single
-        # distributed write), then promote each _shard=N partition dir to
-        # the shard=N/<table>.parquet layout with driver-side renames —
-        # metadata ops, no data movement.  The old per-shard loop
-        # re-filtered series+samples once per shard: O(shards x data).
-        series_stage = os.path.join(out_dir, "_series_stage")
-        samples_stage = os.path.join(out_dir, "_samples_stage")
-        (
-            assigned.sortWithinPartitions(*order)
-            .write.mode("overwrite")
-            .option("compression", series_compression or compression)
-            .partitionBy("_shard")
-            .option("maxRecordsPerFile", row_group_size)
-            .option(
-                "parquet.bloom.filter.enabled#" + S.label_to_column(S.METRIC_NAME_LABEL),
-                "true",
-            )
-            .parquet(series_stage)
+        samples = shard.samples.join(
+            assigned.select(S.SERIES_HASH_COLUMN, "_shard"), S.SERIES_HASH_COLUMN
+        ).repartition(F.col("_shard"), F.col(S.TIME_BUCKET_COLUMN))
+        _write_shard(
+            assigned, samples, out_dir,
+            dataclasses.replace(shard.meta, sort_labels=tuple(sort_labels)),
+            row_group_size=row_group_size, compression=compression,
+            series_compression=series_compression, samples_compression=samples_compression,
+            split_col="_shard",
         )
-        (
-            samples.repartition(F.col("_shard"), F.col(S.TIME_BUCKET_COLUMN))
-            .write.mode("overwrite")
-            .option("compression", samples_compression or compression)
-            .partitionBy("_shard", S.TIME_BUCKET_COLUMN)
-            .option("maxRecordsPerFile", row_group_size)
-            .parquet(samples_stage)
-        )
-        meta = S.ShardMeta(
-            mint_ms=mint_ms,
-            maxt_ms=maxt_ms,
-            col_duration_ms=col_duration_ms,
-            sort_labels=tuple(sort_labels),
-        ).with_schemas(assigned.drop("_shard").schema, samples.drop("_shard").schema)
-        dirs = []
-        shard_ids = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(series_stage)
-            if d.startswith("_shard=")
-        )
-        import shutil
-
-        for sid in shard_ids:
-            sdir = os.path.join(out_dir, f"shard={sid}")
-            os.makedirs(sdir, exist_ok=True)
-            os.rename(
-                os.path.join(series_stage, f"_shard={sid}"),
-                os.path.join(sdir, "series.parquet"),
-            )
-            sample_part = os.path.join(samples_stage, f"_shard={sid}")
-            if os.path.isdir(sample_part):
-                os.rename(sample_part, os.path.join(sdir, "samples.parquet"))
-            else:  # series with zero in-range samples: empty table dir
-                os.makedirs(os.path.join(sdir, "samples.parquet"), exist_ok=True)
-            meta.write(sdir)
-            dirs.append(sdir)
-        shutil.rmtree(series_stage, ignore_errors=True)
-        shutil.rmtree(samples_stage, ignore_errors=True)
-        return dirs
     finally:
         assigned.unpersist()
-
-
-def to_shard(
-    df: DataFrame,
-    ts_col: str = "ts",
-    value_col: str | None = "value",
-    labels_col: str | None = "labels",
-    col_duration_ms: int = S.DEFAULT_COL_DURATION_MS,
-    mint_ms: int | None = None,
-    maxt_ms: int | None = None,
-    extra_value_cols: list[str] | None = None,
-):
-    """In-memory conversion: long-form samples -> a ShardDataset (no I/O).
-
-    Same transform as :func:`convert` but returns live DataFrames — used to
-    run the matcher engine directly over any relational input.
-    """
-    if labels_col is not None and labels_col in df.columns:
-        df = wide_from_label_map(df, labels_col)
-    label_cols = S.label_columns(df.columns)
-    if mint_ms is None or maxt_ms is None:
-        row = df.agg(F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")).collect()[0]
-        mint_ms = int(row["mn"]) if mint_ms is None else mint_ms
-        maxt_ms = int(row["mx"]) if maxt_ms is None else maxt_ms
-    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
-    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
-    value_exprs = (
-        [F.col(value_col).cast("double").alias(S.VALUE_COLUMN)] if value_col is not None else []
-    ) + [F.col(c) for c in (extra_value_cols or [])]
-    samples = hashed.select(
-        F.col(S.SERIES_HASH_COLUMN),
-        S.data_col_idx(F.col(ts_col).cast("long"), mint_ms, col_duration_ms).alias(S.TIME_BUCKET_COLUMN),
-        F.col(ts_col).cast("long").alias(S.TS_COLUMN),
-        *value_exprs,
-    )
-    meta = S.ShardMeta(
-        mint_ms=mint_ms, maxt_ms=maxt_ms, col_duration_ms=col_duration_ms
-    ).with_schemas(series.schema, samples.schema)
-    return ShardDataset(series=series, samples=samples, meta=meta)
+    shard_ids = sorted(int(d.split("=", 1)[1]) for d in os.listdir(out_dir) if d.startswith("shard="))
+    return [os.path.join(out_dir, f"shard={sid}") for sid in shard_ids]
 
 
 def convert_merged(
@@ -286,71 +337,32 @@ def convert(
     — the float ``s_value``.  The read side serves whatever sample
     columns exist (queryable.py value_cols discovery).
     """
-    if labels_col is not None and labels_col in df.columns:
-        df = wide_from_label_map(df, labels_col)
-    label_cols = S.label_columns(df.columns)
-    if mint_ms is None or maxt_ms is None:
-        row = df.agg(
-            F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")
-        ).collect()[0]
-        mint_ms = int(row["mn"]) if mint_ms is None else mint_ms
-        maxt_ms = int(row["mx"]) if maxt_ms is None else maxt_ms
-
-    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
-
-    sort_cols = [S.label_to_column(l) for l in sort_labels if S.label_to_column(l) in label_cols]
-    remaining = [c for c in sorted(label_cols) if c not in sort_cols]
-    series_order = sort_cols + remaining  # sort labels first, then full label set
-                                          # (reference comparator: convert/convert.go:745-755)
-
-    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
+    shard = to_shard(
+        df, ts_col=ts_col, value_col=value_col, labels_col=labels_col,
+        col_duration_ms=col_duration_ms, mint_ms=mint_ms, maxt_ms=maxt_ms,
+        extra_value_cols=extra_value_cols,
+    )
+    series, samples = shard.series, shard.samples
+    order = _series_order(shard.label_cols, sort_labels)
     if max_series is not None:
-        # shard row cap (reference: limitReader, convert/writer.go:262-285)
-        series = series.limit(max_series)
-        hashed = hashed.join(
+        # shard row cap over the SORTED series stream (reference:
+        # limitReader, convert/writer.go:262-285): the first N in series
+        # order, which is total because series rows are distinct label sets
+        series = series.orderBy(*order).limit(max_series)
+        samples = samples.join(
             F.broadcast(series.select(S.SERIES_HASH_COLUMN)), S.SERIES_HASH_COLUMN, "left_semi"
         )
     nparts = num_shards or max(1, series.sparkSession.sparkContext.defaultParallelism // 2)
-    series_sorted = series.repartitionByRange(nparts, *[F.col(c) for c in series_order]) \
-        .sortWithinPartitions(*series_order)
-
-    value_exprs = (
-        [F.col(value_col).cast("double").alias(S.VALUE_COLUMN)] if value_col is not None else []
-    ) + [F.col(c) for c in (extra_value_cols or [])]
-    samples = hashed.select(
-        F.col(S.SERIES_HASH_COLUMN),
-        S.data_col_idx(F.col(ts_col).cast("long"), mint_ms, col_duration_ms).alias(S.TIME_BUCKET_COLUMN),
-        F.col(ts_col).cast("long").alias(S.TS_COLUMN),
-        *value_exprs,
+    return _write_shard(
+        series.repartitionByRange(nparts, *[F.col(c) for c in order]),
+        samples.repartition(nparts, F.col(S.SERIES_HASH_COLUMN)),
+        out_dir,
+        dataclasses.replace(shard.meta, sort_labels=tuple(sort_labels)),
+        row_group_size=row_group_size,
+        compression=compression,
+        series_compression=series_compression,
+        samples_compression=samples_compression,
     )
-
-    os.makedirs(out_dir, exist_ok=True)
-    (
-        series_sorted.write.mode("overwrite")
-        .option("compression", series_compression or compression)
-        .option("maxRecordsPerFile", row_group_size)
-        .option("parquet.bloom.filter.enabled#" + S.label_to_column(S.METRIC_NAME_LABEL), "true")
-        .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
-        .parquet(os.path.join(out_dir, "series.parquet"))
-    )
-    (
-        samples.repartition(nparts, F.col(S.SERIES_HASH_COLUMN))
-        .sortWithinPartitions(S.SERIES_HASH_COLUMN, S.TS_COLUMN)
-        .write.mode("overwrite")
-        .option("compression", samples_compression or compression)
-        .partitionBy(S.TIME_BUCKET_COLUMN)
-        .option("maxRecordsPerFile", row_group_size)
-        .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
-        .parquet(os.path.join(out_dir, "samples.parquet"))
-    )
-    meta = S.ShardMeta(
-        mint_ms=mint_ms,
-        maxt_ms=maxt_ms,
-        col_duration_ms=col_duration_ms,
-        sort_labels=tuple(sort_labels),
-    ).with_schemas(series_sorted.schema, samples.schema)
-    meta.write(out_dir)
-    return meta
 
 
 def convert_bucketed(
@@ -386,27 +398,12 @@ def convert_bucketed(
     Directory-based :func:`convert` remains the portable interchange
     form; use this when the engine owns the catalog.
     """
-    if labels_col is not None and labels_col in df.columns:
-        df = wide_from_label_map(df, labels_col)
-    label_cols = S.label_columns(df.columns)
-    if mint_ms is None or maxt_ms is None:
-        row = df.agg(F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")).collect()[0]
-        mint_ms = int(row["mn"]) if mint_ms is None else mint_ms
-        maxt_ms = int(row["mx"]) if maxt_ms is None else maxt_ms
-
-    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
-    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
-    value_exprs = (
-        [F.col(value_col).cast("double").alias(S.VALUE_COLUMN)] if value_col is not None else []
-    ) + [F.col(c) for c in (extra_value_cols or [])]
-    samples = hashed.select(
-        F.col(S.SERIES_HASH_COLUMN),
-        S.data_col_idx(F.col(ts_col).cast("long"), mint_ms, col_duration_ms).alias(
-            S.TIME_BUCKET_COLUMN
-        ),
-        F.col(ts_col).cast("long").alias(S.TS_COLUMN),
-        *value_exprs,
+    shard = to_shard(
+        df, ts_col=ts_col, value_col=value_col, labels_col=labels_col,
+        col_duration_ms=col_duration_ms, mint_ms=mint_ms, maxt_ms=maxt_ms,
+        extra_value_cols=extra_value_cols,
     )
+    series, samples = shard.series, shard.samples
 
     # ONE FILE PER BUCKET (r13): a bucketed write emits one file per
     # (writer task, bucket) pair, so feeding it W arbitrary partitions
@@ -438,8 +435,8 @@ def convert_bucketed(
         .saveAsTable(f"{table_prefix}_samples")
     )
     meta = S.ShardMeta(
-        mint_ms=mint_ms,
-        maxt_ms=maxt_ms,
+        mint_ms=shard.meta.mint_ms,
+        maxt_ms=shard.meta.maxt_ms,
         col_duration_ms=col_duration_ms,
         sort_labels=tuple(sort_labels),
     )
@@ -556,8 +553,8 @@ def convert_streaming(
     Spark ingests the stream AND maintains the same queryable layout.
 
     Exactly-once: foreachBatch + the checkpoint gives at-least-once
-    batch replay, and ``convert()`` writes with mode=overwrite into the
-    epoch-keyed directory, so a replayed batch overwrites its own shard
+    batch replay, and ``convert()`` replaces the epoch-keyed directory
+    as a whole, so a replayed batch overwrites its own shard
     (idempotent), never duplicates it.
 
     Small per-batch shards are the expected streaming cost;
@@ -646,9 +643,10 @@ def delete_series(
     (pushdown-friendly); the samples prune by anti-joining the
     REMOVED hashes — broadcast when the deletion is selective, which
     is the operational case; a deletion that removes most of a shard
-    should be expressed as retention (drop the shard) instead.  Sort
-    order is preserved from the source files, so the rewrite is
-    map-only: no global re-sort, no shuffle of the samples."""
+    should be expressed as retention (drop the shard) instead.  The
+    source files are already in layout order, so the rewrite needs no
+    global re-sort and no shuffle of the samples: only the writer's
+    sort within each partition."""
     from parquet_common_spark.matchers import matchers_to_predicate
 
     src = ShardDataset.read(spark, shard_dir)
@@ -659,26 +657,10 @@ def delete_series(
     kept_samples = samples.join(
         F.broadcast(removed), S.SERIES_HASH_COLUMN, "left_anti"
     )
-    os.makedirs(out_dir, exist_ok=True)
-    (
-        kept_series.write.mode("overwrite")
-        .option("compression", compression)
-        .option("maxRecordsPerFile", row_group_size)
-        .option("parquet.bloom.filter.enabled#" + S.label_to_column(S.METRIC_NAME_LABEL), "true")
-        .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
-        .parquet(os.path.join(out_dir, "series.parquet"))
+    return _write_shard(
+        kept_series, kept_samples, out_dir, src.meta,
+        row_group_size=row_group_size, compression=compression,
     )
-    (
-        kept_samples.write.mode("overwrite")
-        .option("compression", compression)
-        .partitionBy(S.TIME_BUCKET_COLUMN)
-        .option("maxRecordsPerFile", row_group_size)
-        .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
-        .parquet(os.path.join(out_dir, "samples.parquet"))
-    )
-    meta = src.meta.with_schemas(kept_series.schema, kept_samples.schema)
-    meta.write(out_dir)
-    return meta
 
 
 def downsample_shard(
@@ -727,25 +709,7 @@ def downsample_shard(
             "ds_count", "ds_sum", "ds_min", "ds_max",
         )
     )
-    os.makedirs(out_dir, exist_ok=True)
-    import shutil
-
-    # series table unchanged — copy it verbatim (label sort preserved)
-    src_series = os.path.join(shard_dir, "series.parquet")
-    dst_series = os.path.join(out_dir, "series.parquet")
-    if os.path.exists(dst_series):
-        shutil.rmtree(dst_series)
-    shutil.copytree(src_series, dst_series)
-    (
-        agg.repartition(F.col(S.SERIES_HASH_COLUMN))
-        .sortWithinPartitions(S.SERIES_HASH_COLUMN, S.TS_COLUMN)
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .partitionBy(S.TIME_BUCKET_COLUMN)
-        .option("maxRecordsPerFile", row_group_size)
-        .option("parquet.bloom.filter.enabled#" + S.SERIES_HASH_COLUMN, "true")
-        .parquet(os.path.join(out_dir, "samples.parquet"))
+    return _write_shard(
+        src.series, agg.repartition(F.col(S.SERIES_HASH_COLUMN)), out_dir, meta,
+        row_group_size=row_group_size, compression=compression,
     )
-    meta = meta.with_schemas(src.series.schema, agg.schema)
-    meta.write(out_dir)
-    return meta

@@ -25,7 +25,6 @@ import math
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from parquet_common_spark import schema as S
 
 HIST_FIELDS = "h_count long, h_sum double, h_bounds array<double>, h_counts array<long>"
 
@@ -64,29 +63,12 @@ def histogram_quantile(q: float | Column, bounds: Column, counts: Column) -> Col
 def to_hist_shard(df: DataFrame, labels_col: str = "labels", ts_col: str = "ts"):
     """Long-form histogram samples -> ShardDataset whose samples table
     carries the histogram struct columns instead of s_value."""
-    from parquet_common_spark.convert import wide_from_label_map
-    from parquet_common_spark.queryable import ShardDataset
+    from parquet_common_spark.convert import to_shard
 
-    if labels_col in df.columns:
-        df = wide_from_label_map(df, labels_col)
-    label_cols = S.label_columns(df.columns)
-    row = df.agg(F.min(ts_col).alias("mn"), F.max(ts_col).alias("mx")).collect()[0]
-    mint, maxt = int(row["mn"]), int(row["mx"])
-    hashed = df.withColumn(S.SERIES_HASH_COLUMN, S.series_hash_column(label_cols))
-    series = hashed.select(*label_cols, S.SERIES_HASH_COLUMN).distinct()
-    samples = hashed.select(
-        S.SERIES_HASH_COLUMN,
-        S.data_col_idx(F.col(ts_col).cast("long"), mint, S.DEFAULT_COL_DURATION_MS).alias(
-            S.TIME_BUCKET_COLUMN
-        ),
-        F.col(ts_col).cast("long").alias(S.TS_COLUMN),
-        "h_count",
-        "h_sum",
-        "h_bounds",
-        "h_counts",
+    return to_shard(
+        df, ts_col=ts_col, value_col=None, labels_col=labels_col,
+        extra_value_cols=["h_count", "h_sum", "h_bounds", "h_counts"],
     )
-    meta = S.ShardMeta(mint_ms=mint, maxt_ms=maxt)
-    return ShardDataset(series=series, samples=samples, meta=meta)
 
 
 def quantile_over_select(sel: DataFrame, q: float) -> DataFrame:

@@ -86,43 +86,21 @@ class ShardDataset:
         return S.label_columns(self.series.columns)
 
 
-class DictResultCache:
-    """Default predicate-result cache: an unbounded in-process dict of
-    persisted DataFrames.  The reference makes its cache an injectable
-    interface (search/constraint_cache.go:16-33) so deployments can plug
-    bounded/shared implementations; any object with the same three
-    methods (``get``/``put``/``clear``) drops in here — e.g. an LRU that
-    unpersists evicted frames."""
-
-    def __init__(self):
-        self._store: dict = {}
-
-    def get(self, key):
-        return self._store.get(key)
-
-    def put(self, key, df: DataFrame) -> None:
-        self._store[key] = df.persist()
-
-    def clear(self) -> None:
-        for df in self._store.values():
-            df.unpersist()
-        self._store.clear()
-
-
-class LruResultCache(DictResultCache):
+class LruResultCache:
     """Bounded predicate-result cache: keeps the ``capacity`` most
     recently used entries and UNPERSISTS evicted frames, so a
     long-lived session querying many matcher sets holds at most
     ``capacity`` cached series frames (the reference's cache is
     similarly bounded per-deployment; search/constraint_cache.go:16-33).
-    Inject with ``ParquetQueryable(shards, result_cache=
-    LruResultCache(64))``."""
+    The reference makes its cache an injectable interface, and so does
+    :class:`ParquetQueryable`: any object with the same three methods
+    (``get``/``put``/``clear``) drops in."""
 
     def __init__(self, capacity: int = 64):
-        super().__init__()
         if capacity < 1:
             raise ValueError("capacity must be >= 1")
         self._capacity = int(capacity)
+        self._store: dict = {}
 
     def get(self, key):
         df = self._store.get(key)
@@ -140,6 +118,11 @@ class LruResultCache(DictResultCache):
             oldest = next(iter(self._store))  # insertion order == recency
             self._store.pop(oldest).unpersist()
 
+    def clear(self) -> None:
+        for df in self._store.values():
+            df.unpersist()
+        self._store.clear()
+
 
 class ParquetQueryable:
     """Matcher-query engine over one or more shards.
@@ -154,15 +137,15 @@ class ParquetQueryable:
         (shard, matcher-set) across Select calls — the reference's
         predicate-result cache (O9, search/constraint_cache.go:16-71),
         realized as persisted DataFrames (MEMORY_AND_DISK) instead of
-        row-range lists.  Pass ``True`` for the built-in
-        :class:`DictResultCache`, or any object with ``get(key)``,
+        row-range lists.  Pass ``True`` for a bounded
+        ``LruResultCache(64)``, or any object with ``get(key)``,
         ``put(key, df)`` and ``clear()`` to inject your own policy
         (mirroring the reference's injectable cache interface)."""
         if not shards:
             raise ValueError("at least one shard required")
         self.shards = shards
         if result_cache is True:
-            self._result_cache = DictResultCache()
+            self._result_cache = LruResultCache()
         elif result_cache:
             self._result_cache = result_cache
         else:

@@ -4,10 +4,10 @@ The reference lists streaming as *Planned* (README "Current Status &
 Roadmap"), so this layer is forward-looking rather than parity work
 (SURVEY.md §2.9).  Design:
 
-  - ingest_stream: file-source stream of long-form samples -> the same
-    series/samples layout `convert` writes, via foreachBatch (the label
-    union is data-dependent, so each micro-batch widens the schema with
-    unionByName semantics).  Checkpointed, exactly-once per batch.
+  - ingest of a stream into the series/samples layout is
+    ``convert.convert_streaming``: each micro-batch becomes one complete
+    shard directory (meta included), written by the same code as a batch
+    ``convert``, so ``ShardDataset.read`` opens every committed batch.
   - windowed_series_agg: event-time tumbling-window aggregation per series
     with a watermark for late data — readStream -> window(ts) ->
     writeStream, the canonical streaming rollup.
@@ -23,10 +23,9 @@ batch layout uses, so a lambda architecture over one storage layout.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     DoubleType,
@@ -34,47 +33,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-from parquet_common_spark import schema as S
-
-
-def ingest_stream(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    input_schema: str = "labels map<string,string>, ts long, value double",
-    col_duration_ms: int = S.DEFAULT_COL_DURATION_MS,
-    mint_ms: int = 0,
-    available_now: bool = True,
-):
-    """Stream long-form sample files into the series/samples parquet layout.
-
-    foreachBatch because the l_* column set is data-dependent per batch;
-    batch writes append and the series table dedups on read (the batch
-    `convert` path remains the compaction story).
-    """
-    stream = spark.readStream.schema(input_schema).parquet(input_dir)
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from parquet_common_spark.convert import to_shard
-
-        if batch_df.isEmpty():
-            return
-        shard = to_shard(batch_df, col_duration_ms=col_duration_ms, mint_ms=mint_ms)
-        shard.series.write.mode("append").parquet(os.path.join(out_dir, "series.parquet"))
-        shard.samples.write.mode("append").partitionBy(S.TIME_BUCKET_COLUMN).parquet(
-            os.path.join(out_dir, "samples.parquet")
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_series_agg(

@@ -189,6 +189,31 @@ def test_convert_max_series(spark, tmp_path):
     assert sh.samples.count() == 5
 
 
+def test_convert_max_series_keeps_first_in_sort_order(spark, tmp_path):
+    """The cap keeps the first N series in the written sort order (sort
+    labels, then the full label set), whatever the shuffle layout."""
+    from parquet_common_spark import ParquetQueryable
+    from parquet_common_spark import convert as C
+
+    df = spark.createDataFrame(
+        [({"__name__": "m", "i": str(i)}, 0, 1.0) for i in range(20)],
+        "labels map<string,string>, ts long, value double",
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            out = str(tmp_path / f"capped{parts}")
+            C.convert(df, out, max_series=5)
+            sh = ParquetQueryable.from_paths(spark, [out]).shards[0]
+            assert sorted(r["l_i"] for r in sh.series.collect()) == ["0", "1", "10", "11", "12"]
+            assert sorted(r["l_i"] for r in sh.samples.join(sh.series, "s_series_hash").collect()) == [
+                "0", "1", "10", "11", "12"
+            ]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 # ------------------------------------------ native histogram chunk codec
 # (EncHistogram / EncFloatHistogram, reference schema/encoder.go:75-84)
 

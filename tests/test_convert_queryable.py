@@ -594,6 +594,35 @@ def test_streaming_convert_and_compaction(spark, tmp_path):
     assert n_files(compact_dir) <= n_files(shard_dirs[0]) * len(shard_dirs)
 
 
+def test_failed_write_leaves_the_old_shard(spark, tmp_path):
+    """A shard write is all or nothing: a samples write that fails over an
+    existing shard leaves it readable with its old meta and rows, and no
+    temp directory behind; a write that succeeds replaces it whole."""
+    from parquet_common_spark.queryable import ShardDataset
+
+    out = str(tmp_path / "shard")
+    df = make_long_df(spark, n_series=4)
+    old_meta = C.convert(df, out)
+    old = ShardDataset.read(spark, out)
+    counts = (old.series.count(), old.samples.count())
+    later = df.withColumn("ts", F.col("ts") + 1000)
+    failing = later.withColumn(
+        "value", F.when(F.col("ts") >= 0, F.raise_error(F.lit("boom"))).otherwise(F.col("value"))
+    )
+    with pytest.raises(Exception, match="boom"):
+        C.convert(failing, out)
+    assert S.ShardMeta.read(out) == old_meta
+    kept = ShardDataset.read(spark, out)
+    assert (kept.series.count(), kept.samples.count()) == counts
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["shard"]
+
+    new_meta = C.convert(later.where(F.col("labels")["bar"] != "0000"), out)
+    assert S.ShardMeta.read(out) == new_meta and new_meta.mint_ms == 1000
+    fresh = ShardDataset.read(spark, out)
+    assert (fresh.series.count(), fresh.samples.count()) == (3, 3 * 8)
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["shard"]
+
+
 def test_delete_series_rewrite(spark, shard, tmp_path):
     src, _ = shard
     out = str(tmp_path / "deleted")

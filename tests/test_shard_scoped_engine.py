@@ -4,7 +4,8 @@ Pins the read path of ``PromQLEngine.from_shards`` and parquet-backed
 ``load``: every selector issues its own ``ParquetQueryable.select``
 bounded to ``(eff - range, eff]`` over its steps, shards outside that
 window are skipped, and opening a shard runs no Spark job because every
-writer records both table schemas in the shard meta.  A hypothesis
+writer records both table schemas in the shard meta, and every writer
+writes the same file layout as ``convert()``.  A hypothesis
 differential checks the scoped path against the in-memory engine fed the
 same samples.
 """
@@ -251,20 +252,23 @@ def test_in_memory_frames_are_local_relations(spark):
 
 
 def _convert_shard(spark, out):
+    # newest sample first, so only a real sort puts a file in (hash, ts) order
     rows = [
         ({"__name__": "m", "env": env, "i": str(i)}, t * 30 * MIN_MS, float(i + t))
-        for env in ("dev", "prod") for i in range(3) for t in range(8)
+        for env in ("dev", "prod") for i in range(3) for t in reversed(range(8))
     ]
     df = spark.createDataFrame(rows, "labels map<string,string>, ts long, value double")
     C.convert(df, out)
     return out
 
 
-def _written_shards(spark, tmp_path) -> dict[str, str]:
+@pytest.fixture(scope="module")
+def written_shards(spark, tmp_path_factory) -> dict[str, str]:
     """One shard directory per writer."""
+    tmp_path = tmp_path_factory.mktemp("writers")
     src = _convert_shard(spark, str(tmp_path / "convert"))
     df = spark.createDataFrame(
-        [({"__name__": "m", "i": str(i)}, t * MIN_MS, float(t)) for i in range(4) for t in range(5)],
+        [({"__name__": "m", "i": str(i)}, t * MIN_MS, float(t)) for i in range(4) for t in reversed(range(5))],
         "labels map<string,string>, ts long, value double",
     )
     sharded = C.convert_sharded(df, str(tmp_path / "sharded"), num_shards=2)
@@ -295,12 +299,12 @@ def _written_shards(spark, tmp_path) -> dict[str, str]:
     }
 
 
-def test_every_writer_records_the_inferred_schemas(spark, tmp_path):
+def test_every_writer_records_the_inferred_schemas(spark, written_shards):
     """Each writer records both schemas exactly as footer inference
     returns them, so ShardDataset.read opens its shards with no job."""
     from parquet_common_spark.queryable import ShardDataset
 
-    for writer, d in _written_shards(spark, tmp_path).items():
+    for writer, d in written_shards.items():
         meta = S.ShardMeta.read(d)
         assert meta.series_schema == spark.read.parquet(d + "/series.parquet").schema, writer
         assert meta.samples_schema == spark.read.parquet(d + "/samples.parquet").schema, writer
@@ -308,6 +312,87 @@ def test_every_writer_records_the_inferred_schemas(spark, tmp_path):
         assert jobs == 0, writer
         assert shard.samples.schema == meta.samples_schema, writer
         assert shard.series.count() > 0, writer
+
+
+def _layout(spark, shard_dir: str) -> dict:
+    """The on-disk format facts of one shard, read from the parquet-mr
+    footers and the files themselves."""
+    import pyarrow.parquet as pq
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    meta = S.ShardMeta.read(shard_dir)
+    facts = {}
+    for table in ("series.parquet", "samples.parquet"):
+        root = os.path.join(shard_dir, table)
+        blooms, codecs, unsorted = set(), set(), []
+        max_rows = 0
+        files = glob.glob(root + "/**/part-*.parquet", recursive=True)
+        assert files, root
+        for f in files:
+            footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+                conf, jvm.org.apache.hadoop.fs.Path(f)
+            )
+            blocks = footer.getBlocks()
+            for i in range(blocks.size()):
+                block = blocks.get(i)
+                max_rows = max(max_rows, block.getRowCount())
+                cols = block.getColumns()
+                for j in range(cols.size()):
+                    col = cols.get(j)
+                    codecs.add(col.getCodec().name())
+                    if col.getBloomFilterOffset() >= 0:
+                        blooms.add(col.getPath().toDotString())
+            t = pq.read_table(f)
+            if table == "samples.parquet":
+                keys = list(zip(t[S.SERIES_HASH_COLUMN].to_pylist(), t[S.TS_COLUMN].to_pylist()))
+            else:
+                order = C._series_order(S.label_columns(t.column_names), meta.sort_labels)
+                keys = [
+                    tuple((v is not None, v or "") for v in row)  # NULLS FIRST
+                    for row in zip(*(t[c].to_pylist() for c in order))
+                ]
+            if keys != sorted(keys):
+                unsorted.append(os.path.relpath(f, root))
+        parts = sorted(
+            e for e in os.listdir(root) if not e.startswith((".", "_"))
+            and os.path.isdir(os.path.join(root, e))
+        )
+        facts[table] = {
+            "blooms": blooms,
+            "codecs": codecs,
+            "within_row_cap": max_rows <= S.DEFAULT_ROW_GROUP_SIZE,
+            "partitions": {p.split("=")[0] for p in parts},
+            "unsorted_files": unsorted,
+        }
+    return facts
+
+
+def test_every_writer_writes_convert_layout(spark, written_shards):
+    """One writer owns the file format: every writer's shards carry the
+    same bloom-filter columns, codec, row-group cap, time-bucket
+    partitioning and per-file sort order as convert()'s."""
+    want = {
+        "series.parquet": {
+            # the l___name__ bloom option writes nothing: parquet-mr
+            # dictionary-encodes the repeating column and skips its bloom
+            "blooms": {S.SERIES_HASH_COLUMN},
+            "codecs": {"ZSTD"},
+            "within_row_cap": True,
+            "partitions": set(),
+            "unsorted_files": [],
+        },
+        "samples.parquet": {
+            "blooms": set(),
+            "codecs": {"ZSTD"},
+            "within_row_cap": True,
+            "partitions": {S.TIME_BUCKET_COLUMN},
+            "unsorted_files": [],
+        },
+    }
+    assert _layout(spark, written_shards["convert"]) == want
+    for writer, d in written_shards.items():
+        assert _layout(spark, d) == want, writer
 
 
 def test_shards_without_recorded_schemas_still_open(spark, tmp_path):

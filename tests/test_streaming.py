@@ -3,14 +3,13 @@ custom stateful rate operator."""
 
 from __future__ import annotations
 
-import os
+import glob
 
 import pytest
 from pyspark.sql import functions as F
 
-from parquet_common_spark import Matcher, ParquetQueryable, schema as S
+from parquet_common_spark import ShardDataset, convert_streaming, schema as S
 from parquet_common_spark.streaming.ingest import (
-    ingest_stream,
     rate_per_series,
     windowed_series_agg,
 )
@@ -28,24 +27,35 @@ def _write_sample_files(spark, d, n_batches=3):
             .coalesce(1).write.mode("append").parquet(d)
 
 
-def test_ingest_stream_roundtrip(spark, tmp_path):
+def test_convert_streaming_roundtrip(spark, tmp_path):
+    """Stream ingest writes one complete shard per micro-batch: counts,
+    time buckets per ``col_duration_ms``, and a restart with the same
+    checkpoint processes nothing new."""
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     _write_sample_files(spark, src)
-    q = ingest_stream(spark, src, out, ckpt, col_duration_ms=10_000, available_now=True)
-    q.awaitTermination(120)
-    # meta sidecar is the batch-convert concern; read the tables directly
-    series = spark.read.parquet(os.path.join(out, "series.parquet")).distinct()
-    samples = spark.read.parquet(os.path.join(out, "samples.parquet"))
-    assert series.count() == 4
-    assert samples.count() == 4 * 30
+    stream = spark.readStream.schema(
+        "labels map<string,string>, ts long, value double"
+    ).parquet(src)
+
+    def ingest():
+        q = convert_streaming(stream, out, ckpt, col_duration_ms=10_000, mint_ms=0)
+        q.awaitTermination(120)
+        return sorted(glob.glob(out + "/batch=*"))
+
+    batches = ingest()
+    assert batches
+    shards = [ShardDataset.read(spark, d) for d in batches]
+    hashes = {r[0] for sh in shards for r in sh.series.select(S.SERIES_HASH_COLUMN).collect()}
+    assert len(hashes) == 4
+    assert sum(sh.samples.count() for sh in shards) == 4 * 30
     # time buckets assigned per 10s duration
-    assert samples.select(S.TIME_BUCKET_COLUMN).distinct().count() == 3
+    buckets = {r[0] for sh in shards for r in sh.samples.select(S.TIME_BUCKET_COLUMN).collect()}
+    assert buckets == {0, 1, 2}
     # exactly-once: restarting with same checkpoint processes nothing new
-    q2 = ingest_stream(spark, src, out, ckpt, col_duration_ms=10_000, available_now=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(os.path.join(out, "samples.parquet")).count() == 120
+    assert ingest() == batches
+    assert sum(ShardDataset.read(spark, d).samples.count() for d in batches) == 120
 
 
 def test_windowed_series_agg(spark, tmp_path):

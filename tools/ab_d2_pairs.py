@@ -1,6 +1,6 @@
 """Interleaved A/B for d2's pair pipeline (minhash_lsh_pairs) variants.
 
-Profiling at sf10 (OPTIMIZATION_r13.md) put the cost at: verify joins
+Profiling at sf10 put the cost at: verify joins
 ~50% (two SMJs sorting the 17M-row candidate frame to attach ~52-element
 shingle arrays), candidate self-join + distinct ~25%, signatures ~25%.
 Variants (all produce the IDENTICAL verified pair set — asserted first):
