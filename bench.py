@@ -85,7 +85,7 @@ def main() -> int:
     # swung 16.4 -> 14.0 -> 11.1 -> 15.0 s on substantially-similar
     # headline code, so the artifact itself must carry enough to tell a
     # regression from host weather.  Every benched query (headline AND
-    # select_* AND bucketed) runs >= 3 trials; the JSON records the full
+    # select_* AND select_dir_*) runs >= 3 trials; the JSON records the full
     # per-query trial list, the host load-average before/after, and a
     # same-code band [sum-of-mins, sum-of-medians] — if a future total
     # sits inside the band, it's the same code under different weather.
@@ -155,13 +155,13 @@ def main() -> int:
     # the bucketed-vs-directory trade measured in every round artifact.
     # Reported under a SEPARATE key so the headline total stays
     # comparable round-over-round.
-    bucketed: dict[str, float] = {}
+    select_dir: dict[str, float] = {}
 
     def run_select_dir_bench():
         from parquet_common_spark.benchmarks import select_bench
 
         for name, r in select_bench.run_dir(spark).items():
-            bucketed[f"select_dir_{name}"] = r["sec"]
+            select_dir[f"select_dir_{name}"] = r["sec"]
             spread[f"select_dir_{name}"] = r["trials"]
 
     guarded("_select_dir_bench", run_select_dir_bench)
@@ -207,7 +207,7 @@ def main() -> int:
     # that with trial diagnostics and the recorded BENCH_r{8,9}.json
     # carried parsed:null.  So stdout gets a COMPACT line (metric,
     # value, unit, queries, sf, band — well under the cap) and the full
-    # diagnostics (trials, rows, loadavg, weather, bucketed, errors) go
+    # diagnostics (trials, rows, loadavg, weather, select_dir, errors) go
     # to BENCH_DIAG.json next to this script.
     diag = {
         "rows": rows,
@@ -215,9 +215,9 @@ def main() -> int:
         "same_code_band_sec": band,
         "load_avg": {"start": load_start, "end": load_end},
         "weather": weather,
-        # key kept as "bucketed" for round-over-round diff tooling; since
-        # r13 it carries the DIRECTORY-layout secondary (select_dir_*)
-        "bucketed": bucketed,
+        # the DIRECTORY-layout secondary (select_dir_*); diagnostics
+        # written before this key existed carry it as "bucketed"
+        "select_dir": select_dir,
         "errors": errors,
     }
     diag_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DIAG.json")

@@ -20,11 +20,13 @@ job is ONE declarative plan, built in two places only:
       series sorted by sort labels then the full label set within each file,
       samples sorted by (series_hash, ts) within each file and partitioned by
       time_bucket (== per-time data columns), maxRecordsPerFile == row-group
-      cap, zstd by default, bloom-filter options on l___name__ and
-      series_hash.  parquet-mr writes a bloom only for a column chunk it
-      did not dictionary-encode, so in practice the series file carries one
-      on its unique ``s_series_hash`` and none on the repeating
-      ``l___name__`` or on the samples' ``s_series_hash``.  Both tables and
+      cap, zstd by default, a bloom-filter option on the series'
+      l___name__.  parquet-mr writes a bloom only for a column chunk it
+      did not dictionary-encode, so in practice it writes none for the
+      repeating ``l___name__``.  ``s_series_hash`` gets no bloom: it is
+      only a join key, no predicate filters on it, and on the unique
+      series column parquet-mr would write about 1 MB of filter per file
+      (most of a small shard's bytes).  Both tables and
       ``_meta.json`` go to a sibling temp directory that is renamed into
       place last, so a failed write leaves the previous shard intact.
 
@@ -152,9 +154,9 @@ def _write_shard(
         # alone, which replaces (not refines) a sort within partitions.
         for table, df, codec, partition_cols, key, blooms in (
             ("series.parquet", series, series_compression, extra, order,
-             [S.label_to_column(S.METRIC_NAME_LABEL), S.SERIES_HASH_COLUMN]),
+             [S.label_to_column(S.METRIC_NAME_LABEL)]),
             ("samples.parquet", samples, samples_compression, [*extra, S.TIME_BUCKET_COLUMN],
-             [S.SERIES_HASH_COLUMN, S.TS_COLUMN], [S.SERIES_HASH_COLUMN]),
+             [S.SERIES_HASH_COLUMN, S.TS_COLUMN], []),
         ):
             df = df.sortWithinPartitions(*partition_cols, *key)
             writer = (

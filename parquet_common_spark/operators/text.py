@@ -176,7 +176,8 @@ def top_bigram(grams: Column) -> Column:
     """The most frequent 2-gram as struct(c, g) — count-desc with the
     lexicographically LARGEST gram breaking count ties (both engines
     sort structs field-wise, so the oracle reproduces the tie-break).
-    NULL when there are no 2-grams.
+    NULL elements are never counted; NULL when no non-NULL 2-gram is
+    left.
 
     Per-doc cost is O(|grams| log |grams|): sort the array, then one
     run-length pass over the now-adjacent duplicates (r13 — the old
@@ -188,7 +189,6 @@ def top_bigram(grams: Column) -> Column:
     overwrites the incumbent.  ``grams`` should be a materialized
     column reference (withColumn first) so the sort input is evaluated
     once."""
-    s = F.sort_array(grams)
     init = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).alias("run"),
@@ -198,7 +198,9 @@ def top_bigram(grams: Column) -> Column:
 
     def step(a, x):
         run = F.when(x == a["prev"], a["run"] + 1).otherwise(F.lit(1))
-        take = (run > a["best_c"]) | ((run == a["best_c"]) & (x > a["best_g"]))
+        take = x.isNotNull() & (
+            (run > a["best_c"]) | ((run == a["best_c"]) & (x > a["best_g"]))
+        )
         return F.struct(
             x.alias("prev"),
             run.alias("run"),
@@ -206,11 +208,12 @@ def top_bigram(grams: Column) -> Column:
             F.when(take, x).otherwise(a["best_g"]).alias("best_g"),
         )
 
-    done = F.aggregate(s, init, step)
-    return F.when(
-        F.size(grams) > 0,
-        F.struct(done["best_c"].alias("c"), done["best_g"].alias("g")),
-    )
+    def finish(a):
+        return F.when(
+            a["best_c"] > 0, F.struct(a["best_c"].alias("c"), a["best_g"].alias("g"))
+        )
+
+    return F.aggregate(F.sort_array(grams), init, step, finish)
 
 
 def top_bigram_char_fraction(

@@ -2197,10 +2197,8 @@ def st4(spark: SparkSession, sf_dir: str) -> DataFrame:
         _DC_MIN_HITS,
         _DC_N,
     )
-    from parquet_common_spark.plans.common import ensure_session_env
 
-    ensure_session_env(spark)
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = load(spark, sf_dir, "documents")["documents"]
     bench_docs = batch.where(F.col("source") == _DC_BENCH_SRC)
     # r11 redesign: the first version attached the benchmark set as ONE
     # broadcast array row and took array_intersect(_sh, _bench) per
@@ -2299,10 +2297,8 @@ def st5(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parquet_common_spark.operators import dedup as DD
     from parquet_common_spark.operators.pipeline_queries import _D8_SPLIT, _SH_TAU
-    from parquet_common_spark.plans.common import ensure_session_env
 
-    ensure_session_env(spark)
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    batch = load(spark, sf_dir, "documents")["documents"]
     idx = tempfile.mkdtemp(prefix="pcs_st5_idx_")
     DD.build_minhash_index(
         batch.where(F.col("doc_id") < _D8_SPLIT), "doc_id", "text", idx
@@ -2818,7 +2814,7 @@ def st8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ensure_session_env(spark)
-    batch_raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch_raw = read_events_raw(spark, sf_dir)
     ev = load(spark, sf_dir, "events")["events"]
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     err = ev.where(F.col("event_type") == "error").select(
@@ -3164,10 +3160,8 @@ def st10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parquet_common_spark.operators.linkage import _jaro_winkler_udf
     from parquet_common_spark.operators.pipeline_queries import _scratch_dir
-    from parquet_common_spark.plans.common import ensure_session_env
 
-    ensure_session_env(spark)
-    batch = spark.read.parquet(f"{sf_dir}/part.parquet")
+    batch = load(spark, sf_dir, "part")["part"]
     master = batch.where(F.col("p_partkey") % 2 == 0).select(
         F.col("p_name").alias("nm"),
         F.col("p_brand").alias("mb"),
@@ -3306,10 +3300,8 @@ def st11(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_fit,
         quantize_vectors,
     )
-    from parquet_common_spark.plans.common import ensure_session_env
 
-    ensure_session_env(spark)
-    batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    batch = load(spark, sf_dir, "embeddings")["embeddings"]
     static = batch.where(F.col("vec_id") % 2 == 0)
     centroids = kmeans_fit(static, k=4, iterations=2, dim=64)
 

@@ -7,11 +7,16 @@ side-by-side and hash-compares values, so:
   - floating aggregates are rounded (2 for money, 6 for ratios) to absorb
     summation-order differences between engines;
   - every LIMIT is preceded by a fully deterministic ORDER BY.
+
+Driver tables are opened one way: ``load`` (and ``read_events_raw`` for
+the events table with ``ts`` as stored) goes through ``_open_table``,
+which hands Spark the schema recorded in the parquet footer.  Opening a
+table therefore runs no Spark job, sets no session conf and keeps no
+cache: every call sees the file as it is now.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -48,10 +53,10 @@ def event_ts_ntz(df: DataFrame) -> DataFrame:
     """Normalize ``events.ts`` to TIMESTAMP_NTZ(µs) whatever the physical type.
 
     The driver regenerates testdata between rounds and has shipped
-    ``events.ts`` both as TIMESTAMP(NANOS) (Spark's vectorized reader
-    rejects it; with ``nanosAsLong`` it surfaces as BIGINT nanos) and as
-    plain ``timestamp[us]`` (surfaces as TIMESTAMP_NTZ directly).  Branch
-    on the READ dtype rather than assuming either layout:
+    ``events.ts`` both as TIMESTAMP(NANOS) (``_open_table`` reads it as
+    BIGINT nanos) and as plain ``timestamp[us]`` (surfaces as
+    TIMESTAMP_NTZ directly).  Branch on the READ dtype rather than
+    assuming either layout:
       - bigint        -> truncate ns->µs (DuckDB does the same on read)
       - timestamp_ntz -> already right
       - timestamp     -> NTZ cast (identity under the pinned UTC session TZ)
@@ -79,17 +84,40 @@ def event_ts_ltz_col(dtype: str, col: str = "ts"):
     return F.col(col).cast("timestamp")
 
 
+def _open_table(spark: SparkSession, path: str) -> DataFrame:
+    """Open a driver table with the schema its parquet footer records, so
+    opening runs no Spark job (``spark.read.parquet`` infers the schema
+    in a job of its own, about 100 ms per table).
+
+    The footer is read on the driver with pyarrow; ``path`` is one
+    parquet file or a directory of part files.  The conversion gives
+    what Spark's own inference gives: physical INT96 is Spark's
+    TIMESTAMP, and a TIMESTAMP(NANOS) column reads as its raw BIGINT
+    nanoseconds (what ``nanosAsLong`` would infer; Spark has no
+    nanosecond timestamp type).
+    """
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import LongType, StructField, StructType, TimestampType
+
+    footer = pq.read_metadata(ds.dataset(path, format="parquet").files[0]).schema
+    int96 = {c.path for c in map(footer.column, range(len(footer))) if c.physical_type == "INT96"}
+    arrow = footer.to_arrow_schema()
+    fields = []
+    for f, a in zip(from_arrow_schema(arrow, prefer_timestamp_ntz=True), arrow):
+        if f.name in int96:
+            f = StructField(f.name, TimestampType())
+        elif pa.types.is_timestamp(a.type) and a.type.unit == "ns":
+            f = StructField(f.name, LongType())
+        fields.append(f)
+    return spark.read.schema(StructType(fields)).parquet(path)
+
+
 def read_events_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read events.parquet, falling back to nanos-as-long for legacy data."""
-    try:
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
-        df.schema  # force analysis so a NANOS rejection surfaces here
-        return df
-    except Exception:
-        # physical TIMESTAMP(NANOS): the only read path Spark offers is the
-        # legacy long surface — set the conf and re-read
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return spark.read.parquet(f"{sf_dir}/events.parquet")
+    """The events table with ``ts`` as stored (see ``event_ts_ntz``)."""
+    return _open_table(spark, f"{sf_dir}/events.parquet")
 
 
 def await_stream(q, deadline: float | None = None) -> None:
@@ -196,49 +224,20 @@ def stream_to_parquet(
     )
 
 
-_RELATION_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    """Read the requested driver tables (TESTDATA.md layout).
+    """Open the requested driver tables (TESTDATA.md layout), all of them
+    by default.
 
-    ``events.ts`` is normalized to TIMESTAMP_NTZ(µs) via ``event_ts_ntz``
-    so every downstream plan sees one canonical event-time type regardless
-    of how the driver generated the file.
+    Each table is opened by ``_open_table`` from its footer schema, on
+    every call and with no Spark job, so a rewritten file is always read
+    as it is now.  ``events.ts`` is normalized to TIMESTAMP_NTZ(µs) via
+    ``event_ts_ntz``, so every downstream plan sees one event-time type
+    whatever way the file stores it.
     """
     ensure_session_env(spark)
-    app = spark.sparkContext.applicationId
-    # Evict entries from other applicationIds (ADVICE r11: plans cached
-    # for stopped sessions otherwise leak for the process lifetime, and
-    # are unusable anyway — a DataFrame is bound to its session).
-    stale = [k for k in _RELATION_CACHE if k[0] != app]
-    for k in stale:
-        del _RELATION_CACHE[k]
-    # Scratch-path guard (VERDICT r11): only the driver's read-only
-    # testdata roots are cache-eligible.  A scratch/output dir can be
-    # rewritten between calls, and a cached plan would pin the OLD file
-    # listing (parquet footers are re-read, but the discovered file set
-    # is part of the plan) — so anything else always reads fresh.
-    cacheable = os.path.realpath(sf_dir).startswith("/root/testdata/")
-    out: dict[str, DataFrame] = {}
-    for n in names or TABLES:
-        # Catalog-style relation cache (r11): re-reading the same
-        # read-only table re-ran parquet footer/schema discovery on
-        # every query call — ~0.7-0.9s of EVERY bench trial at sf0.1
-        # was load(), not the query (PERF_NOTES r11).  DataFrames are
-        # immutable lazy plans, so reuse is exactly what a registered
-        # catalog view gives; keyed by applicationId so a new session
-        # never sees a stale plan.
-        key = (app, sf_dir, n)
-        df = _RELATION_CACHE.get(key) if cacheable else None
-        if df is None:
-            if n == "events":
-                df = event_ts_ntz(read_events_raw(spark, sf_dir))
-            else:
-                df = spark.read.parquet(f"{sf_dir}/{n}.parquet")
-            if cacheable:
-                _RELATION_CACHE[key] = df
-        out[n] = df
+    out = {n: _open_table(spark, f"{sf_dir}/{n}.parquet") for n in names or TABLES}
+    if "events" in out:
+        out["events"] = event_ts_ntz(out["events"])
     return out
 
 

@@ -792,7 +792,7 @@ def pq5(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = f"{root}/src"
     wide.repartition(3).write.parquet(src)
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(wide.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
@@ -987,10 +987,8 @@ def st7(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parquet_common_spark.operators import sketch as SK
     from parquet_common_spark.operators.text import tokens
-    from parquet_common_spark.plans.common import ensure_session_env
 
-    ensure_session_env(spark)
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    schema = load(spark, sf_dir, "documents")["documents"].schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

@@ -90,17 +90,3 @@ def test_bench_line_no_truncation_when_small():
     assert "queries_truncated" not in parsed
     assert parsed["queries"] == {"q1": 1.0}
 
-
-def test_load_relation_cache_reuses_plans(spark):
-    """load() must hand back the SAME DataFrame object for a repeated
-    (app, sf_dir, table) request — parquet footer/schema discovery was
-    0.7-0.9s of every bench trial before r11 — and distinct sf_dirs must
-    never share an entry."""
-    from parquet_common_spark.plans.common import load
-
-    a = load(spark, "/root/testdata/sf0.001", "nation")["nation"]
-    b = load(spark, "/root/testdata/sf0.001", "nation")["nation"]
-    assert a is b
-    c = load(spark, "/root/testdata/sf0.01", "nation")["nation"]
-    assert c is not a
-    assert a.count() == c.count() == 25

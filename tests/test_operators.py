@@ -469,6 +469,27 @@ def test_repetition_metrics(spark):
     assert out[4]["dupf"] == 0.0 and out[4]["topf"] == 0.0
 
 
+def test_top_bigram_skips_null_grams(spark):
+    """A NULL element is never counted, never wins a count tie and never
+    becomes the top gram; an all-NULL array has no top gram."""
+    rows = [
+        (0, [None, "b c", None, "a b", "b c", None, None]),  # NULLs outnumber the winner
+        (1, [None, "x y"]),                                  # NULL sorts before a lone gram
+        (2, [None, None]),
+        (3, [None]),
+        (4, []),
+        (5, None),
+    ]
+    df = spark.createDataFrame(rows, "id long, grams array<string>")
+    out = {
+        r["id"]: r["top"]
+        for r in df.select("id", T.top_bigram(F.col("grams")).alias("top")).collect()
+    }
+    assert (out[0]["g"], out[0]["c"]) == ("b c", 2)
+    assert (out[1]["g"], out[1]["c"]) == ("x y", 1)
+    assert out[2] is None and out[3] is None and out[4] is None and out[5] is None
+
+
 # ------------------------------------------------------------ PII bank
 
 

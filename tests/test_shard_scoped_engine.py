@@ -368,15 +368,19 @@ def _layout(spark, shard_dir: str) -> dict:
     return facts
 
 
-def test_every_writer_writes_convert_layout(spark, written_shards):
+def test_every_writer_writes_convert_layout(spark, written_shards, tmp_path):
     """One writer owns the file format: every writer's shards carry the
     same bloom-filter columns, codec, row-group cap, time-bucket
-    partitioning and per-file sort order as convert()'s."""
+    partitioning and per-file sort order as convert()'s, and no bloom
+    filter inflates the series files."""
+    from pyspark.sql import functions as F
+
     want = {
         "series.parquet": {
             # the l___name__ bloom option writes nothing: parquet-mr
-            # dictionary-encodes the repeating column and skips its bloom
-            "blooms": {S.SERIES_HASH_COLUMN},
+            # dictionary-encodes the repeating column and skips its bloom;
+            # the unique s_series_hash (a join key only) has no bloom
+            "blooms": set(),
             "codecs": {"ZSTD"},
             "within_row_cap": True,
             "partitions": set(),
@@ -393,6 +397,16 @@ def test_every_writer_writes_convert_layout(spark, written_shards):
     assert _layout(spark, written_shards["convert"]) == want
     for writer, d in written_shards.items():
         assert _layout(spark, d) == want, writer
+
+    # a 1,000-series block: with a bloom on s_series_hash its series
+    # files took about 2 MB, nearly all of it filter
+    labels = F.create_map(F.lit("__name__"), F.lit("m"), F.lit("i"), F.col("id").cast("string"))
+    block = spark.range(1000).select(
+        labels.alias("labels"), (F.col("id") % 120 * MIN_MS).alias("ts"), F.lit(1.0).alias("value")
+    )
+    C.convert(block, str(tmp_path / "block"))
+    files = glob.glob(str(tmp_path / "block" / "series.parquet" / "*.parquet"))
+    assert files and sum(map(os.path.getsize, files)) < 100_000
 
 
 def test_shards_without_recorded_schemas_still_open(spark, tmp_path):

@@ -21,7 +21,10 @@ def load(path: str) -> dict:
     # output is the dict itself
     d = raw.get("parsed", raw)
     queries = dict(d.get("queries", {}))
-    queries.update(d.get("bucketed", {}))
+    # secondary per-query maps: "select_dir" (directory-layout selects);
+    # older files carry their secondary map as "bucketed"
+    for key in ("bucketed", "select_dir"):
+        queries.update(d.get(key, {}))
     return {"total": d.get("value"), "queries": queries}
 
 

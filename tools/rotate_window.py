@@ -40,17 +40,12 @@ sys.path.insert(0, ROOT)
 
 
 def registry_order() -> list[str]:
-    """Canonical registry insertion order (NOT the window-reordered
-    prefix ``__spark_entry__._registry()`` builds)."""
-    from parquet_common_spark.operators import pipeline_queries  # noqa: F401
-    from parquet_common_spark.plans import (  # noqa: F401
-        analytics,
-        functions_coverage,
-        tpch,
-    )
-    from parquet_common_spark.plans.common import REGISTRY
+    """Canonical registry order, the same whichever query module was
+    imported first (NOT the window-reordered prefix
+    ``__spark_entry__._registry()`` builds)."""
+    import __spark_entry__
 
-    return list(REGISTRY)
+    return list(__spark_entry__._registry_in_order())
 
 
 def load_ledger(
