@@ -23,10 +23,11 @@ DataFrame plans:
   - range-vector functions (rate/increase/delta, *_over_time, deriv/
     predict_linear, idelta/irate, changes/resets, double exponential
     smoothing, absent_over_time) implement the upstream formulas with
-    explicit per-eval window bounds; the extrapolation algorithm is the
-    same one functions/promql.py pins over tumbling windows
-    (promql/functions.go extrapolatedRate), re-expressed for
-    eval-at-instant bounds.
+    explicit per-eval window bounds: every selector and subquery joins
+    its points to the steps in ONE place (``_window_join``), and the
+    extrapolation, reset/change tests, instant pair and Holt fold are
+    the same kernels functions/promql.py uses over tumbling windows
+    (promql/functions.go), called with ``(eval - range, eval]`` bounds.
 
 Storage is either in memory (plain ``load``: the model the differential
 tests compare against) or shard-backed (``from_shards``, and ``load`` with
@@ -52,6 +53,7 @@ from parquet_common_spark.matchers import Matcher, matcher_to_predicate
 from parquet_common_spark.queryable import ParquetQueryable, ShardDataset
 from parquet_common_spark.schema import label_to_column
 from parquet_common_spark.session import local_frame
+from parquet_common_spark.functions import promql
 from parquet_common_spark.functions import promql_vec as pv
 from parquet_common_spark.functions.histograms import histogram_quantile
 from parquet_common_spark.promqltest import promqlparse as ast
@@ -90,6 +92,119 @@ def _cv_key(col: F.Column) -> F.Column:
     return F.coalesce(
         F.array_join(F.transform(col, lambda x: x.cast("string")), ","),
         F.lit("exp"),
+    )
+
+
+def _pairs(which: str, h: str | None = None, sign: float | None = None) -> F.Column:
+    """The ``which`` ("pos"/"neg") buckets of histogram ``h`` — a struct
+    column, or the row's own columns when None — as (idx, cnt, sch)
+    structs: each count a double (times ``sign`` when given), tagged
+    with its histogram's schema so ``_merge_buckets`` can downscale it."""
+
+    def col(c: str) -> F.Column:
+        return F.col(f"{h}.{c}" if h else c)
+
+    def cnt(v: F.Column) -> F.Column:
+        return v.cast("double") if sign is None else v.cast("double") * F.lit(sign)
+
+    return F.transform(
+        F.zip_with(
+            col(f"nh_{which}_idx"),
+            col(f"nh_{which}_counts"),
+            lambda k, v: F.struct(k.alias("idx"), cnt(v).alias("cnt")),
+        ),
+        lambda p: F.struct(
+            p["idx"].alias("idx"),
+            p["cnt"].alias("cnt"),
+            col("nh_schema").alias("sch"),
+        ),
+    )
+
+
+def _merge_buckets(pairs: F.Column):
+    """Merge a flattened array of (idx, cnt, sch) sparse-bucket pairs
+    into (sorted distinct idx array, per-idx summed counts) at the
+    group's coarsest schema ``_smin``.  Index k at schema s covers
+    (γ^(k-1), γ^k] with γ = 2^(2^-s); at schema t ≤ s the covering
+    bucket is ceil(k / 2^(s-t)) (upstream model/histogram.go
+    ReduceResolution) — F.ceil rounds toward +Inf, correct for negative
+    indices too.  Quadratic in the bucket count per group — bounded by
+    ≤ ~4 buckets/octave, so the expression stays tiny and JVM-side."""
+    pairs = F.transform(
+        pairs,
+        lambda p: F.struct(
+            F.ceil(
+                p["idx"].cast("double")
+                / F.pow(F.lit(2.0), (p["sch"] - F.col("_smin")).cast("double"))
+            )
+            .cast("int")
+            .alias("idx"),
+            p["cnt"].alias("cnt"),
+        ),
+    )
+    idxs = F.array_sort(F.array_distinct(F.transform(pairs, lambda p: p["idx"])))
+    merged = F.transform(
+        idxs,
+        lambda k: F.struct(
+            k.alias("idx"),
+            F.aggregate(
+                pairs,
+                F.lit(0.0),
+                lambda a, p: a + F.when(p["idx"] == k, p["cnt"]).otherwise(F.lit(0.0)),
+            ).alias("cnt"),
+        ),
+    )
+    # compact: a merged/differenced bucket at exactly 0 disappears
+    # (upstream compaction) — an empty bucket would poison the
+    # quantile walk's in-bucket division
+    merged = F.filter(merged, lambda s: s["cnt"] != 0)
+    return (
+        F.transform(merged, lambda s: s["idx"]),
+        F.transform(merged, lambda s: s["cnt"]),
+    )
+
+
+def _nh_of(h: str | None = None) -> tuple:
+    """``_nh_out``'s histogram arguments read from histogram ``h`` — a
+    struct column, or the row's own columns when None."""
+
+    def col(c: str) -> F.Column:
+        return F.col(f"{h}.{c}" if h else c)
+
+    return (
+        col("nh_schema"),
+        col("nh_zero_count"),
+        col("nh_count"),
+        col("nh_sum"),
+        (col("nh_pos_idx"), col("nh_pos_counts")),
+        (col("nh_neg_idx"), col("nh_neg_counts")),
+        col("nh_custom_values"),
+    )
+
+
+def _nh_out(df, keys, schema, zero, count, total, pos, neg, custom, scale=None) -> DataFrame:
+    """Project a histogram result onto ``keys`` and the ``_NH_SCHEMA``
+    columns.  ``pos``/``neg`` are (idx array, count array) pairs;
+    ``scale`` (a one-argument ``lambda c: ...``) maps the zero count,
+    count, sum and every bucket count.  A derived histogram carries no
+    zero threshold."""
+    sc = scale or (lambda c: c)
+
+    def counts(arr: F.Column) -> F.Column:
+        return arr if scale is None else F.transform(arr, scale)
+
+    return df.select(
+        *keys,
+        schema.alias("nh_schema"),
+        sc(zero).alias("nh_zero_count"),
+        F.lit(None).cast("double").alias("nh_zero_threshold"),
+        sc(count).alias("nh_count"),
+        sc(total).alias("nh_sum"),
+        pos[0].alias("nh_pos_idx"),
+        counts(pos[1]).alias("nh_pos_counts"),
+        neg[0].alias("nh_neg_idx"),
+        counts(neg[1]).alias("nh_neg_counts"),
+        custom.alias("nh_custom_values"),
     )
 
 
@@ -467,15 +582,28 @@ class PromQLEngine:
             return int(self._qend)
         return int(at)
 
-    def _eff_ev(self, sel: ast.VectorSelector):
+    def _eff_ev(self, node):
+        """The effective eval time of a selector or subquery ``node``:
+        ``_ev``, or its fixed ``@`` time, minus its offset."""
         eff = (
-            F.lit(self._resolve_at(sel.at_ms))
-            if sel.at_ms is not None
+            F.lit(self._resolve_at(node.at_ms))
+            if node.at_ms is not None
             else F.col("_ev")
         )
-        if sel.offset_ms:
-            eff = eff - F.lit(int(sel.offset_ms))
+        if node.offset_ms:
+            eff = eff - F.lit(int(node.offset_ms))
         return eff
+
+    def _window_join(self, points: DataFrame, node, steps: _Steps, range_ms: int) -> DataFrame:
+        """``points`` (a ``ts`` column, ms) joined to every step whose
+        left-open window ``(eff - range_ms, eff]`` holds them — the one
+        broadcast range join of selectors and subqueries — with the
+        window bounds as ``_start``/``_end`` (ms) for extrapolation
+        math.  ``node`` carries the ``@``/``offset`` modifiers."""
+        eff = self._eff_ev(node)
+        cond = (F.col("ts") > eff - F.lit(range_ms)) & (F.col("ts") <= eff)
+        j = points.join(F.broadcast(steps.df), on=cond, how="inner")
+        return j.withColumn("_end", eff).withColumn("_start", F.col("_end") - F.lit(range_ms))
 
     def _instant_select(
         self,
@@ -490,9 +618,7 @@ class PromQLEngine:
         the histogram_* function family)."""
         base = self._base(sel, self._window(sel, steps, LOOKBACK_MS))
         labels = [c for c in base.columns if c.startswith("l_")]
-        eff = self._eff_ev(sel)
-        cond = (F.col("ts") > eff - F.lit(LOOKBACK_MS)) & (F.col("ts") <= eff)
-        j = base.join(F.broadcast(steps.df), on=cond, how="inner")
+        j = self._window_join(base, sel, steps, LOOKBACK_MS)
         carried = [
             F.col("value").alias("v"),
             F.col("stale").alias("st"),
@@ -517,18 +643,12 @@ class PromQLEngine:
         )
 
     def _range_frame(self, node: ast.MatrixSelector, steps: _Steps):
-        """Samples in the left-open window (eff-r, eff] per step; carries
-        ``_start``/``_end`` (ms) for extrapolation math."""
-        sel = node.selector
-        base = self._base(sel, self._window(sel, steps, node.range_ms)).where(~F.col("stale"))
+        """Non-stale samples in the left-open window (eff-r, eff] per
+        step (see ``_window_join``)."""
+        sel, rng = node.selector, int(node.range_ms)
+        base = self._base(sel, self._window(sel, steps, rng)).where(~F.col("stale"))
         labels = [c for c in base.columns if c.startswith("l_")]
-        eff = self._eff_ev(sel)
-        cond = (F.col("ts") > eff - F.lit(int(node.range_ms))) & (F.col("ts") <= eff)
-        j = base.join(F.broadcast(steps.df), on=cond, how="inner")
-        j = j.withColumn("_end", self._eff_ev(sel)).withColumn(
-            "_start", F.col("_end") - F.lit(int(node.range_ms))
-        )
-        return j, labels, int(node.range_ms)
+        return self._window_join(base, sel, steps, rng), labels, rng
 
     # ------------------------------------------------------------ binary
 
@@ -773,23 +893,12 @@ class PromQLEngine:
                 grid[p] = None
                 p += step_ms
         kind, inner = self._eval(node.expr, self._steps(sorted(grid) or [0]))
-        if kind == "scalar":
-            inner = inner  # a scalar subquery is a labelless vector
-        elif kind != "vector":
+        # a scalar subquery is a labelless vector
+        if kind not in ("vector", "scalar"):
             raise PromQLEvalError("subquery requires a vector expression")
         labels = [c for c in inner.columns if c not in ("_ev", "value")]
         pts = inner.withColumnRenamed("_ev", "ts")
-        eff = F.lit(at) if at is not None else F.col("_ev")
-        if node.offset_ms:
-            eff = eff - F.lit(int(node.offset_ms))
-        cond = (F.col("ts") > eff - F.lit(rng)) & (F.col("ts") <= eff)
-        j = pts.join(F.broadcast(steps.df), on=cond, how="inner")
-        if at is not None:
-            end = F.lit(at - int(node.offset_ms))
-        else:
-            end = F.col("_ev") - F.lit(int(node.offset_ms))
-        j = j.withColumn("_end", end).withColumn("_start", F.col("_end") - F.lit(rng))
-        return j, labels, rng
+        return self._window_join(pts, node, steps, rng), labels, rng
 
     def _scalar_param(self, arg, steps) -> DataFrame:
         kind, df = self._eval(arg, steps)
@@ -1049,6 +1158,14 @@ class PromQLEngine:
             }
         )
 
+    @staticmethod
+    def _no_hist(df: DataFrame, keys) -> DataFrame:
+        """An empty histogram vector over ``df``'s ``keys`` columns (the
+        storage holds no histogram columns)."""
+        return df.where(F.lit(False)).select(*keys).withColumns(
+            {c: F.lit(None).cast(t) for c, t in _NH_SCHEMA}
+        )
+
     def _hist_vec(self, arg, steps) -> DataFrame:
         """A native-histogram instant vector: selector, sum()/avg()
         aggregation, rate()/increase() over a histogram range, or
@@ -1070,69 +1187,13 @@ class PromQLEngine:
             )
         df = self._instant_select(arg, steps, with_hist=True)
         if "nh_schema" not in df.columns:
-            return df.where(F.lit(False)).withColumns(
-                {c: F.lit(None).cast(t) for c, t in _NH_SCHEMA}
-            )
+            return self._no_hist(df, df.columns)
         return self._norm_hist(df.where(F.col("nh_schema").isNotNull()))
-
-    @staticmethod
-    def _merge_sparse(pairs: F.Column):
-        """Merge a flattened array of (idx, cnt) sparse-bucket pairs into
-        (sorted distinct idx array, per-idx summed counts).  Quadratic in
-        the bucket count per group — bounded by ≤ ~4 buckets/octave, so
-        the expression stays tiny and JVM-side."""
-        idxs = F.array_sort(F.array_distinct(F.transform(pairs, lambda p: p["idx"])))
-        merged = F.transform(
-            idxs,
-            lambda k: F.struct(
-                k.alias("idx"),
-                F.aggregate(
-                    pairs,
-                    F.lit(0.0),
-                    lambda a, p: a + F.when(p["idx"] == k, p["cnt"]).otherwise(F.lit(0.0)),
-                ).alias("cnt"),
-            ),
-        )
-        # compact: a merged/differenced bucket at exactly 0 disappears
-        # (upstream compaction) — an empty bucket would poison the
-        # quantile walk's in-bucket division
-        merged = F.filter(merged, lambda s: s["cnt"] != 0)
-        return (
-            F.transform(merged, lambda s: s["idx"]),
-            F.transform(merged, lambda s: s["cnt"]),
-        )
-
-    @staticmethod
-    def _downscale_pairs(pairs: F.Column) -> F.Column:
-        """Map (idx, cnt, sch) sparse-bucket pairs onto the group's
-        coarsest schema ``_smin``: index k at schema s covers
-        (γ^(k-1), γ^k] with γ = 2^(2^-s); at schema t ≤ s the covering
-        bucket is ceil(k / 2^(s-t)) (upstream model/histogram.go
-        ReduceResolution) — F.ceil rounds toward +Inf, correct for
-        negative indices too."""
-        return F.transform(
-            pairs,
-            lambda p: F.struct(
-                F.ceil(
-                    p["idx"].cast("double")
-                    / F.pow(
-                        F.lit(2.0), (p["sch"] - F.col("_smin")).cast("double")
-                    )
-                )
-                .cast("int")
-                .alias("idx"),
-                p["cnt"].alias("cnt"),
-            ),
-        )
 
     def _hist_sum(self, node: ast.Aggregate, steps, mean: bool = False) -> DataFrame:
         """sum()/avg() (by/without) over a native-histogram vector
-        (upstream promql/engine.go histogram aggregation; avg is the
-        bucket-wise sum scaled by 1/n).  Mixed bucketing schemas within
-        a group downscale to the group's COARSEST schema before the
-        bucket merge (model/histogram ReduceResolution: index k at
-        schema s lands at ceil(k / 2^(s-t)) at schema t), matching
-        upstream's histogram addition."""
+        (upstream promql/engine.go histogram aggregation; see
+        ``_hist_merge``)."""
         inner = self._hist_vec(node.expr, steps)
         if node.by is not None:
             keys = ["_ev"] + [c for c in _mangle(node.by) if c in inner.columns]
@@ -1144,29 +1205,20 @@ class PromQLEngine:
             ]
         else:
             keys = ["_ev"]
-        # each pair carries its row's schema so the post-agg downscale
-        # can map it onto the group's coarsest schema
-        pair = lambda i, c: F.transform(  # noqa: E731
-            F.zip_with(
-                F.col(i),
-                F.col(c),
-                lambda k, v: F.struct(
-                    k.alias("idx"), v.cast("double").alias("cnt")
-                ),
-            ),
-            lambda p: F.struct(
-                p["idx"].alias("idx"),
-                p["cnt"].alias("cnt"),
-                F.col("nh_schema").alias("sch"),
-            ),
-        )
-        staged = inner.select(
+        return self._hist_merge(inner, keys, mean)
+
+    def _hist_merge(self, df: DataFrame, keys, mean: bool) -> DataFrame:
+        """Bucket-wise sum of each ``keys`` group's histograms; ``mean``
+        scales it by 1/n.  Mixed bucketing schemas within a group
+        downscale to the group's COARSEST schema before the merge
+        (``_merge_buckets``), matching upstream's histogram addition."""
+        staged = df.select(
             *keys,
             "nh_schema", "nh_zero_count", "nh_count", "nh_sum",
             "nh_custom_values",
             _cv_key(F.col("nh_custom_values")).alias("_cvk"),
-            pair("nh_pos_idx", "nh_pos_counts").alias("_pp"),
-            pair("nh_neg_idx", "nh_neg_counts").alias("_np"),
+            _pairs("pos").alias("_pp"),
+            _pairs("neg").alias("_np"),
         )
         agg = staged.groupBy(*keys).agg(
             F.min("nh_schema").alias("_smin"),
@@ -1184,30 +1236,25 @@ class PromQLEngine:
             F.count_distinct(F.col("_cvk")).alias("_ncv"),
             F.first("nh_custom_values").alias("nh_custom_values"),
         )
-        agg = agg.where(F.col("_ncv") == 1)
-        scale = (
-            (lambda c: c.cast("double") / F.col("_gn").cast("double"))
-            if mean
-            else (lambda c: c)
+        return _nh_out(
+            agg.where(F.col("_ncv") == 1),
+            keys,
+            F.col("_smin"),
+            F.col("nh_zero_count"),
+            F.col("_count"),
+            F.col("nh_sum"),
+            _merge_buckets(F.col("_pflat")),
+            _merge_buckets(F.col("_nflat")),
+            F.col("nh_custom_values"),
+            scale=(lambda c: c.cast("double") / F.col("_gn").cast("double")) if mean else None,
         )
-        pos_idx, pos_counts = self._merge_sparse(
-            self._downscale_pairs(F.col("_pflat"))
-        )
-        neg_idx, neg_counts = self._merge_sparse(
-            self._downscale_pairs(F.col("_nflat"))
-        )
-        return agg.select(
-            *keys,
-            F.col("_smin").alias("nh_schema"),
-            scale(F.col("nh_zero_count")).alias("nh_zero_count"),
-            F.lit(None).cast("double").alias("nh_zero_threshold"),
-            scale(F.col("_count")).alias("nh_count"),
-            scale(F.col("nh_sum")).alias("nh_sum"),
-            pos_idx.alias("nh_pos_idx"),
-            F.transform(pos_counts, lambda c: scale(c)).alias("nh_pos_counts"),
-            neg_idx.alias("nh_neg_idx"),
-            F.transform(neg_counts, lambda c: scale(c)).alias("nh_neg_counts"),
-            "nh_custom_values",
+
+    def _extrapolation(self, clamp=None):
+        """promql._extrapolate over a window aggregate's ``_n``,
+        ``_first_ts``/``_last_ts`` and ``_start``/``_end`` (ms)."""
+        return promql._extrapolate(
+            F.col("_first_ts"), F.col("_last_ts"), F.col("_start"), F.col("_end"),
+            F.col("_n"), 1e3, clamp,
         )
 
     def _hist_rate(self, node: ast.Call, steps, mode: str) -> DataFrame:
@@ -1229,8 +1276,7 @@ class PromQLEngine:
         observations) are not detected — documented slice."""
         rdf, labels, range_ms = self._matrix_arg(node.args[0], steps)
         if "nh_schema" not in rdf.columns:
-            empty = rdf.where(F.lit(False)).select("_ev", *labels)
-            return empty.withColumns({c: F.lit(None).cast(t) for c, t in _NH_SCHEMA})
+            return self._no_hist(rdf, ["_ev", *labels])
         rdf = rdf.where(F.col("nh_schema").isNotNull())
         pick = F.struct(
             "nh_schema", "nh_zero_count", "nh_count", "nh_sum",
@@ -1240,29 +1286,9 @@ class PromQLEngine:
         wseries = Window.partitionBy("_ev", *labels).orderBy("ts")
         _pair_t = "array<struct<idx:int,cnt:double,sch:int>>"
 
-        # every pair carries its source histogram's schema so the
-        # post-agg downscale can map it onto the window's coarsest
-        def tagged_pairs(prefix: str, which: str, negate: bool = False):
-            sgn = -1.0 if negate else 1.0
-            return F.transform(
-                F.zip_with(
-                    F.col(f"{prefix}.nh_{which}_idx"),
-                    F.col(f"{prefix}.nh_{which}_counts"),
-                    lambda k, v: F.struct(
-                        k.alias("idx"),
-                        (v.cast("double") * F.lit(sgn)).alias("cnt"),
-                    ),
-                ),
-                lambda p: F.struct(
-                    p["idx"].alias("idx"),
-                    p["cnt"].alias("cnt"),
-                    F.col(f"{prefix}.nh_schema").alias("sch"),
-                ),
-            )
-
         def prev_pairs(which: str):
             return F.when(
-                F.col("_reset"), tagged_pairs("_prevh", which)
+                F.col("_reset"), _pairs(which, "_prevh", 1.0)
             ).otherwise(F.array().cast(_pair_t))
 
         staged = rdf.withColumn("_prevh", F.lag(pick).over(wseries))
@@ -1308,57 +1334,37 @@ class PromQLEngine:
             # drops the point with an incompatible-bounds warning
             F.count_distinct(_cv_key(F.col("nh_custom_values"))).alias("_ncv"),
         )
-        to_start = (F.col("_first_ts") - F.col("_start")).cast("double") / 1e3
-        to_end = (F.col("_end") - F.col("_last_ts")).cast("double") / 1e3
-        sampled = (F.col("_last_ts") - F.col("_first_ts")).cast("double") / 1e3
-        avg_dur = sampled / (F.col("_n") - 1).cast("double")
-        threshold = avg_dur * 1.1
-        to_start = F.when(to_start >= threshold, avg_dur / 2).otherwise(to_start)
-        to_end = F.when(to_end >= threshold, avg_dur / 2).otherwise(to_end)
-        factor = (sampled + to_start + to_end) / sampled
+        interval, sampled = self._extrapolation()
+        factor = interval / sampled
         if mode == "rate":
             factor = factor / F.lit(range_ms / 1e3)
         ok = (F.col("_n") >= 2) & (sampled > 0) & (F.col("_ncv") == 1)
 
-        def flat_diff(which: str):
-            # last − first + every pre-reset histogram (already
-            # positive), each pair tagged with its source schema and
-            # downscaled to the window's coarsest before the merge
-            return self._downscale_pairs(
+        def diff(which: str):
+            # last − first + every pre-reset histogram (already positive)
+            return _merge_buckets(
                 F.concat(
-                    tagged_pairs("_l", which),
-                    tagged_pairs("_f", which, negate=True),
+                    _pairs(which, "_l", 1.0),
+                    _pairs(which, "_f", -1.0),
                     F.col(f"_comp_{which[:1]}p"),
                 )
             )
 
-        pos_idx, pos_counts = self._merge_sparse(flat_diff("pos"))
-        neg_idx, neg_counts = self._merge_sparse(flat_diff("neg"))
-        scale = lambda c: (c * factor).cast("double")  # noqa: E731
-
-        out = agg.where(ok).select(
-            "_ev",
-            *labels,
-            F.col("_smin").alias("nh_schema"),
-            scale(
-                F.col("_l.nh_zero_count").cast("double")
-                - F.col("_f.nh_zero_count").cast("double")
-                + F.col("_comp_zero")
-            ).alias("nh_zero_count"),
-            F.lit(None).cast("double").alias("nh_zero_threshold"),
-            scale(
-                F.col("_l.nh_count").cast("double")
-                - F.col("_f.nh_count").cast("double")
-                + F.col("_comp_count")
-            ).alias("nh_count"),
-            scale(
-                F.col("_l.nh_sum") - F.col("_f.nh_sum") + F.col("_comp_sum")
-            ).alias("nh_sum"),
-            pos_idx.alias("nh_pos_idx"),
-            F.transform(pos_counts, lambda c: c * factor).alias("nh_pos_counts"),
-            neg_idx.alias("nh_neg_idx"),
-            F.transform(neg_counts, lambda c: c * factor).alias("nh_neg_counts"),
-            F.col("_l.nh_custom_values").alias("nh_custom_values"),
+        out = _nh_out(
+            agg.where(ok),
+            ["_ev", *labels],
+            F.col("_smin"),
+            F.col("_l.nh_zero_count").cast("double")
+            - F.col("_f.nh_zero_count").cast("double")
+            + F.col("_comp_zero"),
+            F.col("_l.nh_count").cast("double")
+            - F.col("_f.nh_count").cast("double")
+            + F.col("_comp_count"),
+            F.col("_l.nh_sum") - F.col("_f.nh_sum") + F.col("_comp_sum"),
+            diff("pos"),
+            diff("neg"),
+            F.col("_l.nh_custom_values"),
+            scale=lambda c: (c * factor).cast("double"),
         )
         return self._drop_name(out)
 
@@ -1366,15 +1372,13 @@ class PromQLEngine:
         """sum_over_time()/avg_over_time()/last_over_time() over a
         native-histogram range vector (upstream funcSumOverTime /
         funcAvgOverTime / funcLastOverTime histogram branches):
-        bucket-wise merge of every in-window histogram, downscaled to
-        the window's coarsest schema; avg scales by 1/n; last picks the
+        ``_hist_merge`` of every in-window histogram; last picks the
         newest sample and (alone among the three) KEEPS the metric
         name."""
         fn = node.func
         rdf, labels, _ = self._matrix_arg(node.args[0], steps)
         if "nh_schema" not in rdf.columns:
-            empty = rdf.where(F.lit(False)).select("_ev", *labels)
-            return empty.withColumns({c: F.lit(None).cast(t) for c, t in _NH_SCHEMA})
+            return self._no_hist(rdf, ["_ev", *labels])
         rdf = self._norm_hist(rdf.where(F.col("nh_schema").isNotNull()))
         if fn == "last_over_time":
             pick = F.struct(*[F.col(c) for c in _NH_COLS])
@@ -1382,66 +1386,9 @@ class PromQLEngine:
             return agg.select(
                 "_ev", *labels, *[F.col(f"_h.{c}").alias(c) for c in _NH_COLS]
             )
-
-        pair = lambda i, c: F.transform(  # noqa: E731
-            F.zip_with(
-                F.col(i),
-                F.col(c),
-                lambda k, v: F.struct(k.alias("idx"), v.cast("double").alias("cnt")),
-            ),
-            lambda p: F.struct(
-                p["idx"].alias("idx"),
-                p["cnt"].alias("cnt"),
-                F.col("nh_schema").alias("sch"),
-            ),
+        return self._drop_name(
+            self._hist_merge(rdf, ["_ev", *labels], mean=fn == "avg_over_time")
         )
-        staged = rdf.select(
-            "_ev",
-            *labels,
-            "nh_schema", "nh_zero_count", "nh_count", "nh_sum",
-            "nh_custom_values",
-            pair("nh_pos_idx", "nh_pos_counts").alias("_pflat"),
-            pair("nh_neg_idx", "nh_neg_counts").alias("_nflat"),
-        )
-        agg = staged.groupBy("_ev", *labels).agg(
-            F.min("nh_schema").alias("_smin"),
-            F.sum("nh_zero_count").alias("nh_zero_count"),
-            F.sum("nh_count").alias("_count"),
-            F.sum("nh_sum").alias("nh_sum"),
-            F.count(F.lit(1)).alias("_n"),
-            F.flatten(F.collect_list("_pflat")).alias("_pflat"),
-            F.flatten(F.collect_list("_nflat")).alias("_nflat"),
-            # in-window custom-bounds changes cannot merge (see _hist_rate)
-            F.count_distinct(_cv_key(F.col("nh_custom_values"))).alias("_ncv"),
-            F.first("nh_custom_values").alias("nh_custom_values"),
-        )
-        agg = agg.where(F.col("_ncv") == 1)
-        scale = (
-            (lambda c: (c / F.col("_n")).cast("double"))
-            if fn == "avg_over_time"
-            else (lambda c: c.cast("double"))
-        )
-        pos_idx, pos_counts = self._merge_sparse(
-            self._downscale_pairs(F.col("_pflat"))
-        )
-        neg_idx, neg_counts = self._merge_sparse(
-            self._downscale_pairs(F.col("_nflat"))
-        )
-        out = agg.select(
-            "_ev",
-            *labels,
-            F.col("_smin").alias("nh_schema"),
-            scale(F.col("nh_zero_count")).alias("nh_zero_count"),
-            F.lit(None).cast("double").alias("nh_zero_threshold"),
-            scale(F.col("_count")).alias("nh_count"),
-            scale(F.col("nh_sum")).alias("nh_sum"),
-            pos_idx.alias("nh_pos_idx"),
-            F.transform(pos_counts, lambda c: scale(c)).alias("nh_pos_counts"),
-            neg_idx.alias("nh_neg_idx"),
-            F.transform(neg_counts, lambda c: scale(c)).alias("nh_neg_counts"),
-            "nh_custom_values",
-        )
-        return self._drop_name(out)
 
     @staticmethod
     def _hist_match_keep(node: ast.Binary, l_labs, r_labs):
@@ -1466,6 +1413,35 @@ class PromQLEngine:
             keep = [c for c in l_labs if c not in ign]
         return match, keep
 
+    def _match_join(self, node: ast.Binary, left, lpack, right, rpack, left_is_lhs: bool = True):
+        """One-to-one vector matching (``_hist_match_keep``) of ``left``
+        and ``right``, each carried as one ``(name, column)`` pack ->
+        (frame of ``_ev``, the result labels and both packs; the result
+        labels).  ``left_is_lhs``: whether ``left`` is the expression's
+        LHS, whose labels the result keeps."""
+        l_labs = [c for c in left.columns if c.startswith("l_")]
+        r_labs = [c for c in right.columns if c.startswith("l_")]
+        match, keep = self._hist_match_keep(
+            node, *((l_labs, r_labs) if left_is_lhs else (r_labs, l_labs))
+        )
+        for c in match:
+            if c not in left.columns:
+                left = left.withColumn(c, F.lit(None).cast("string"))
+            if c not in right.columns:
+                right = right.withColumn(c, F.lit(None).cast("string"))
+        L = left.select("_ev", *match, lpack[1].alias(lpack[0])).alias("L")
+        R = right.select("_ev", *match, rpack[1].alias(rpack[0])).alias("R")
+        cond = F.col("L._ev") == F.col("R._ev")
+        for c in match:
+            cond = cond & F.col(f"L.{c}").eqNullSafe(F.col(f"R.{c}"))
+        j = L.join(R, cond, "inner").select(
+            F.col("L._ev").alias("_ev"),
+            *[F.col(f"L.{c}").alias(c) for c in keep],
+            lpack[0],
+            rpack[0],
+        )
+        return j, keep
+
     def _hist_binary(self, node: ast.Binary, steps) -> DataFrame:
         """Histogram arithmetic (upstream promql/engine.go
         VectorscalarBinop / VectorVectorBinop histogram branches):
@@ -1478,7 +1454,14 @@ class PromQLEngine:
         group_left/group_right with histogram values are outside this
         slice and raise."""
         op = node.op
+        pack = F.struct(*[F.col(c) for c in _NH_COLS])
         if op in ("*", "/"):
+            def by(col: str):
+                factor = (
+                    F.col(col) if op == "*" else F.lit(1.0) / F.col(col)
+                ).cast("double")
+                return lambda c: c.cast("double") * factor
+
             # the scalar side is whichever subtree evaluates to scalar
             # kind; histogram / anything-but-scalar is invalid upstream
             def _try_scalar(sub):
@@ -1498,24 +1481,8 @@ class PromQLEngine:
                 j = h.join(
                     F.broadcast(sdf.withColumnRenamed("value", "_s")), on="_ev"
                 )
-                factor = (
-                    F.col("_s") if op == "*" else F.lit(1.0) / F.col("_s")
-                ).cast("double")
-                scaled = j.withColumns(
-                    {
-                        "nh_zero_count": F.col("nh_zero_count").cast("double")
-                        * factor,
-                        "nh_count": F.col("nh_count").cast("double") * factor,
-                        "nh_sum": F.col("nh_sum") * factor,
-                        "nh_pos_counts": F.transform(
-                            "nh_pos_counts", lambda c: c.cast("double") * factor
-                        ),
-                        "nh_neg_counts": F.transform(
-                            "nh_neg_counts", lambda c: c.cast("double") * factor
-                        ),
-                    }
-                ).drop("_s")
-                return self._drop_name(scaled)
+                keys = [c for c in h.columns if c not in _NH_COLS]
+                return self._drop_name(_nh_out(j, keys, *_nh_of(), scale=by("_s")))
 
             # float-VECTOR matching (upstream VectorVectorBinop's
             # histogram×float branch): exactly one side is
@@ -1543,74 +1510,15 @@ class PromQLEngine:
                 raise PromQLEvalError(f"histogram {op} needs a vector operand")
             h = self._drop_name(self._norm_hist(self._hist_vec(hside, steps)))
             f = self._drop_name(fdf)
-            h_labs = [c for c in h.columns if c.startswith("l_")]
-            f_labs = [c for c in f.columns if c.startswith("l_")]
-            lhs_labs = h_labs if hside is node.lhs else f_labs
-            rhs_labs = f_labs if hside is node.lhs else h_labs
-            match, keep = self._hist_match_keep(node, lhs_labs, rhs_labs)
-            for c in match:
-                if c not in h.columns:
-                    h = h.withColumn(c, F.lit(None).cast("string"))
-                if c not in f.columns:
-                    f = f.withColumn(c, F.lit(None).cast("string"))
-            pack_h = F.struct(*[F.col(c) for c in _NH_COLS])
-            L = h.select("_ev", *match, pack_h.alias("_h")).alias("L")
-            R = f.select("_ev", *match, F.col("value").alias("_v")).alias("R")
-            cond = F.col("L._ev") == F.col("R._ev")
-            for c in match:
-                cond = cond & F.col(f"L.{c}").eqNullSafe(F.col(f"R.{c}"))
-            j = L.join(R, cond, "inner").select(
-                F.col("L._ev").alias("_ev"),
-                *[F.col(f"L.{c}").alias(c) for c in keep],
-                "_h",
-                "_v",
+            j, keep = self._match_join(
+                node, h, ("_h", pack), f, ("_v", F.col("value")),
+                left_is_lhs=hside is node.lhs,
             )
-            factor = (
-                F.col("_v") if op == "*" else F.lit(1.0) / F.col("_v")
-            ).cast("double")
-            return j.select(
-                "_ev",
-                *keep,
-                F.col("_h.nh_schema").alias("nh_schema"),
-                (F.col("_h.nh_zero_count").cast("double") * factor).alias(
-                    "nh_zero_count"
-                ),
-                F.lit(None).cast("double").alias("nh_zero_threshold"),
-                (F.col("_h.nh_count").cast("double") * factor).alias("nh_count"),
-                (F.col("_h.nh_sum") * factor).alias("nh_sum"),
-                F.col("_h.nh_pos_idx").alias("nh_pos_idx"),
-                F.transform(
-                    F.col("_h.nh_pos_counts"), lambda c: c.cast("double") * factor
-                ).alias("nh_pos_counts"),
-                F.col("_h.nh_neg_idx").alias("nh_neg_idx"),
-                F.transform(
-                    F.col("_h.nh_neg_counts"), lambda c: c.cast("double") * factor
-                ).alias("nh_neg_counts"),
-                F.col("_h.nh_custom_values").alias("nh_custom_values"),
-            )
+            return _nh_out(j, ["_ev", *keep], *_nh_of("_h"), scale=by("_v"))
 
         l = self._drop_name(self._norm_hist(self._hist_vec(node.lhs, steps)))
         r = self._drop_name(self._norm_hist(self._hist_vec(node.rhs, steps)))
-        l_labs = [c for c in l.columns if c.startswith("l_")]
-        r_labs = [c for c in r.columns if c.startswith("l_")]
-        match, keep = self._hist_match_keep(node, l_labs, r_labs)
-        for c in match:
-            if c not in l.columns:
-                l = l.withColumn(c, F.lit(None).cast("string"))
-            if c not in r.columns:
-                r = r.withColumn(c, F.lit(None).cast("string"))
-        pack = F.struct(*[F.col(c) for c in _NH_COLS])
-        L = l.select("_ev", *match, pack.alias("_lh")).alias("L")
-        R = r.select("_ev", *match, pack.alias("_rh")).alias("R")
-        cond = F.col("L._ev") == F.col("R._ev")
-        for c in match:
-            cond = cond & F.col(f"L.{c}").eqNullSafe(F.col(f"R.{c}"))
-        j = L.join(R, cond, "inner").select(
-            F.col("L._ev").alias("_ev"),
-            *[F.col(f"L.{c}").alias(c) for c in keep],
-            "_lh",
-            "_rh",
-        )
+        j, keep = self._match_join(node, l, ("_lh", pack), r, ("_rh", pack))
         j = j.withColumn(
             "_smin", F.least(F.col("_lh.nh_schema"), F.col("_rh.nh_schema"))
         )
@@ -1624,47 +1532,25 @@ class PromQLEngine:
         )
         sgn = 1.0 if op == "+" else -1.0
 
-        def pairs(prefix: str, which: str, s: float):
-            return F.transform(
-                F.zip_with(
-                    F.col(f"{prefix}.nh_{which}_idx"),
-                    F.col(f"{prefix}.nh_{which}_counts"),
-                    lambda k, v: F.struct(
-                        k.alias("idx"),
-                        (v.cast("double") * F.lit(s)).alias("cnt"),
-                    ),
-                ),
-                lambda p: F.struct(
-                    p["idx"].alias("idx"),
-                    p["cnt"].alias("cnt"),
-                    F.col(f"{prefix}.nh_schema").alias("sch"),
-                ),
-            )
-
         def merged(which: str):
-            return self._downscale_pairs(
-                F.concat(pairs("_lh", which, 1.0), pairs("_rh", which, sgn))
+            return _merge_buckets(
+                F.concat(_pairs(which, "_lh", 1.0), _pairs(which, "_rh", sgn))
             )
 
-        pos_idx, pos_counts = self._merge_sparse(merged("pos"))
-        neg_idx, neg_counts = self._merge_sparse(merged("neg"))
         comb = lambda f: (  # noqa: E731
             F.col(f"_lh.{f}").cast("double")
             + F.col(f"_rh.{f}").cast("double") * F.lit(sgn)
         )
-        return j.select(
-            "_ev",
-            *keep,
-            F.col("_smin").alias("nh_schema"),
-            comb("nh_zero_count").alias("nh_zero_count"),
-            F.lit(None).cast("double").alias("nh_zero_threshold"),
-            comb("nh_count").alias("nh_count"),
-            comb("nh_sum").alias("nh_sum"),
-            pos_idx.alias("nh_pos_idx"),
-            pos_counts.alias("nh_pos_counts"),
-            neg_idx.alias("nh_neg_idx"),
-            neg_counts.alias("nh_neg_counts"),
-            F.col("_lh.nh_custom_values").alias("nh_custom_values"),
+        return _nh_out(
+            j,
+            ["_ev", *keep],
+            F.col("_smin"),
+            comb("nh_zero_count"),
+            comb("nh_count"),
+            comb("nh_sum"),
+            merged("pos"),
+            merged("neg"),
+            F.col("_lh.nh_custom_values"),
         )
 
     def _hist_scalar_fn(self, args, steps, value: F.Column | None = None, fn=None):
@@ -1944,16 +1830,12 @@ class PromQLEngine:
 
     def _extrapolated(self, args, steps, is_counter: bool, is_rate: bool) -> DataFrame:
         """promql/functions.go extrapolatedRate with explicit per-eval
-        bounds — the same algorithm functions/promql.py pins over
-        tumbling windows (see extrapolated_increase_over_windows)."""
+        bounds (promql._extrapolate)."""
         rdf, labels, range_ms = self._matrix_arg(args[0], steps)
         w = Window.partitionBy("_ev", *labels).orderBy("ts")
         prev = F.lag("value").over(w)
-        # NaN guard: Spark orders NaN above every number, upstream Go
-        # comparisons with NaN are false (see promql._is_reset)
-        is_reset = (~F.isnan(prev)) & (~F.isnan(F.col("value"))) & (prev > F.col("value"))
         staged = rdf.withColumn(
-            "_reset", F.when(is_reset, prev).otherwise(F.lit(0.0))
+            "_reset", F.when(promql._is_reset(prev, F.col("value")), prev).otherwise(F.lit(0.0))
         )
         agg = staged.groupBy("_ev", *labels).agg(
             F.count(F.lit(1)).alias("_n"),
@@ -1968,20 +1850,10 @@ class PromQLEngine:
         result = F.col("_last_v") - F.col("_first_v") + (
             F.col("_resets") if is_counter else F.lit(0.0)
         )
-        to_start = (F.col("_first_ts") - F.col("_start")).cast("double") / 1e3
-        to_end = (F.col("_end") - F.col("_last_ts")).cast("double") / 1e3
-        sampled = (F.col("_last_ts") - F.col("_first_ts")).cast("double") / 1e3
-        avg_dur = sampled / (F.col("_n") - 1).cast("double")
-        threshold = avg_dur * 1.1
-        to_start = F.when(to_start >= threshold, avg_dur / 2).otherwise(to_start)
-        if is_counter:
-            zero_clamp = F.when(
-                (result > 0) & (F.col("_first_v") >= 0),
-                sampled * F.col("_first_v") / result,
-            )
-            to_start = F.when(zero_clamp < to_start, zero_clamp).otherwise(to_start)
-        to_end = F.when(to_end >= threshold, avg_dur / 2).otherwise(to_end)
-        inc = result * (sampled + to_start + to_end) / sampled
+        interval, sampled = self._extrapolation(
+            clamp=(F.col("_first_v"), result) if is_counter else None
+        )
+        inc = result * interval / sampled
         if is_rate:
             inc = inc / F.lit(range_ms / 1e3)
         out = agg.withColumn(
@@ -1994,50 +1866,28 @@ class PromQLEngine:
             out.select("_ev", *labels, "value")
         )
 
-    def _instant_pair(self, args, steps, is_counter: bool, is_rate: bool):
-        """idelta/irate: last two samples (promql/functions.go
-        instantValue)."""
+    def _instant_pair(self, args, steps, is_rate: bool):
+        """idelta/irate: last two samples (promql._instant_pair)."""
         rdf, labels, _ = self._matrix_arg(args[0], steps)
         w = Window.partitionBy("_ev", *labels).orderBy(F.desc("ts"))
         ranked = rdf.withColumn("_rn", F.row_number().over(w))
         agg = ranked.groupBy("_ev", *labels).agg(
             F.count(F.lit(1)).alias("_n"),
-            F.max(F.when(F.col("_rn") == 1, F.col("value"))).alias("_last_v"),
-            F.max(F.when(F.col("_rn") == 2, F.col("value"))).alias("_prev_v"),
-            F.max(F.when(F.col("_rn") == 1, F.col("ts"))).alias("_last_ts"),
-            F.max(F.when(F.col("_rn") == 2, F.col("ts"))).alias("_prev_ts"),
+            *promql._last_two(F.col("_rn"), F.col("ts"), F.col("value")),
         )
-        idelta = F.col("_last_v") - F.col("_prev_v")
-        pair_reset = (
-            (~F.isnan(F.col("_last_v")))
-            & (~F.isnan(F.col("_prev_v")))
-            & (F.col("_last_v") < F.col("_prev_v"))
-        )
-        num = (
-            F.when(pair_reset, F.col("_last_v")).otherwise(idelta)
-            if is_counter
-            else idelta
-        )
-        dt_s = (F.col("_last_ts") - F.col("_prev_ts")).cast("double") / 1e3
-        if is_rate:
-            val = F.when(
-                (F.col("_n") >= 2) & (F.col("_last_ts") > F.col("_prev_ts")),
-                num / dt_s,
-            )
-        else:
-            val = F.when(F.col("_n") >= 2, idelta)
+        idelta, irate = promql._instant_pair(F.col("_n"), 1e3)
         out = (
-            agg.withColumn("value", val)
+            agg.withColumn("value", irate if is_rate else idelta)
             .where(F.col("value").isNotNull())
             .select("_ev", *labels, "value")
         )
         return ("vector", self._drop_name(out))
 
     def _fn_idelta(self, args, steps):
-        return self._instant_pair(args, steps, False, False)
+        return self._instant_pair(args, steps, False)
 
     def _fn_irate(self, args, steps):
-        return self._instant_pair(args, steps, True, True)
+        return self._instant_pair(args, steps, True)
 
     def _fn_resets(self, args, steps):
         return self._pairs_count(args, steps, resets=True)
@@ -2049,15 +1899,7 @@ class PromQLEngine:
         rdf, labels, _ = self._matrix_arg(args[0], steps)
         w = Window.partitionBy("_ev", *labels).orderBy("ts")
         prev = F.lag("value").over(w)
-        flag = (
-            ((~F.isnan(prev)) & (~F.isnan(F.col("value"))) & (prev > F.col("value")))
-            if resets
-            else (
-                prev.isNotNull()
-                & ((prev != F.col("value")) | (F.isnan(prev) != F.isnan(F.col("value"))))
-                & ~(F.isnan(prev) & F.isnan(F.col("value")))
-            )
-        )
+        flag = (promql._is_reset if resets else promql._is_change)(prev, F.col("value"))
         staged = rdf.withColumn("_f", flag.cast("long"))
         out = staged.groupBy("_ev", *labels).agg(
             F.coalesce(F.sum("_f"), F.lit(0)).cast("double").alias("value")
@@ -2066,7 +1908,9 @@ class PromQLEngine:
 
     def _regression(self, args, steps):
         """least-squares slope/intercept with x in seconds relative to the
-        eval timestamp (promql/functions.go linearRegression)."""
+        eval timestamp (promql/functions.go linearRegression).  Double
+        sums, as Go's; the tumbling layer's DECIMAL-exact sums
+        (promql._regression_sums) serve the DuckDB-checked registry."""
         rdf, labels, _ = self._matrix_arg(args[0], steps)
         x = (F.col("ts") - F.col("_end")).cast("double") / 1e3
         staged = rdf.withColumn("_x", x)
@@ -2215,8 +2059,7 @@ class PromQLEngine:
         return self._fn_double_exponential_smoothing(args, steps)
 
     def _fn_double_exponential_smoothing(self, args, steps):
-        """Holt's linear smoothing — the same fold pinned in
-        functions/promql.py double_exponential_smoothing_over_windows."""
+        """Holt's linear smoothing (promql._holt)."""
         rdf, labels, _ = self._matrix_arg(args[0], steps)
         sf = self._static_number(args[1], "sf")
         tf = self._static_number(args[2], "tf")
@@ -2224,30 +2067,9 @@ class PromQLEngine:
             raise PromQLEvalError("smoothing factors must be in (0, 1)")
         agg = rdf.groupBy("_ev", *labels).agg(
             F.count(F.lit(1)).alias("_n"),
-            F.transform(
-                F.sort_array(F.collect_list(F.struct(F.col("ts"), F.col("value").alias("_v")))),
-                lambda s: s["_v"],
-            ).alias("_vals"),
+            promql._time_sorted([F.col("ts")], F.col("value")).alias("_vals"),
         )
-        sfc, cfc = F.lit(float(sf)), F.lit(1.0 - sf)
-        tfc, ctc = F.lit(float(tf)), F.lit(1.0 - tf)
-
-        def step(acc, v):
-            i = F.element_at(acc, 1)
-            s_prev, s_prev2 = F.element_at(acc, 2), F.element_at(acc, 3)
-            trend, v0 = F.element_at(acc, 4), F.element_at(acc, 5)
-            b1 = v - s_prev
-            s1 = sfc * v + cfc * (s_prev + b1)
-            tr = tfc * (s_prev - s_prev2) + ctc * trend
-            sn = sfc * v + cfc * (s_prev + tr)
-            return (
-                F.when(i == 0.0, F.array(F.lit(1.0), v, F.lit(0.0), F.lit(0.0), v))
-                .when(i == 1.0, F.array(F.lit(2.0), s1, s_prev, b1, v0))
-                .otherwise(F.array(i + 1.0, sn, s_prev, tr, v0))
-            )
-
-        zero = F.array(*[F.lit(0.0)] * 5)
-        smoothed = F.element_at(F.aggregate(F.col("_vals"), zero, step), 2)
+        smoothed = promql._holt(F.col("_vals"), sf, tf)
         out = (
             agg.withColumn("value", F.when(F.col("_n") >= 2, smoothed))
             .where(F.col("value").isNotNull())

@@ -457,6 +457,14 @@ def test_bucketed_write_one_file_per_bucket(spark):
     from urllib.parse import urlparse
 
     df = make_long_df(spark, n_series=16, samples=6).repartition(8)  # many writers
+    # the buckets the fixture's series fill: Spark's bucket id of the
+    # bucket column (HashPartitioning.partitionIdExpression)
+    buckets = (
+        C.to_shard(df, col_duration_ms=8 * 3600 * 1000)
+        .series.select(F.expr(f"pmod(hash({S.SERIES_HASH_COLUMN}), 4)"))
+        .distinct()
+        .count()
+    )
     prefix = "pcs_test_onefile"
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     try:
@@ -464,7 +472,7 @@ def test_bucketed_write_one_file_per_bucket(spark):
         n_series = len(
             [f for f in os.listdir(os.path.join(wh, f"{prefix}_series")) if f.endswith(".parquet")]
         )
-        assert n_series == 4, n_series
+        assert n_series == buckets, (n_series, buckets)
         sdir = os.path.join(wh, f"{prefix}_samples")
         for part in os.listdir(sdir):
             if not part.startswith("s_time_bucket="):

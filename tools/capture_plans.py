@@ -6,16 +6,38 @@ Usage:
   python tools/capture_plans.py after  [sf_dir] [query ...]
 
 Defaults: sf_dir=/root/testdata/sf0.1, queries = all bench headline
-entries.  Writes plans/r12/<name>_<tag>.txt.  Explain only — no
-execution, so it is safe to run alongside other jobs.
+entries.  Writes plans/<round>/<name>_<tag>.txt with Catalyst's
+session-global ids normalized (see ``normalize``), so a before and an
+after capture diff only where the plan really changed:
+
+  diff plans/r13/m9_extrapolated_rate_before.txt plans/r13/m9_extrapolated_rate_after.txt
+
+Explain only — no execution, so it is safe to run alongside other jobs.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+_SESSION_IDS = [
+    (re.compile(r"#\d+L?\b"), "#N"),  # expression ids
+    (re.compile(r"\b(lambda \w+?)_\d+\b"), r"\1_N"),  # lambda variables
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),  # exchange ids
+]
+
+
+def normalize(plan: str) -> str:
+    """``plan`` with the ids Catalyst draws from session-global counters
+    (expression ids ``#123``, lambda variable suffixes, exchange plan
+    ids) replaced by stable placeholders."""
+    for pat, rep in _SESSION_IDS:
+        plan = pat.sub(rep, plan)
+    return plan
 
 
 def main() -> int:
@@ -47,8 +69,10 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
     for n in names:
         df = REGISTRY[n].fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+        plan = normalize(
+            df._jdf.queryExecution().explainString(
+                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+            )
         )
         path = os.path.join(out_dir, f"{n}_{tag}.txt")
         with open(path, "w") as f:
